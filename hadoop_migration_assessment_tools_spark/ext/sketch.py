@@ -139,15 +139,19 @@ def _mg_summaries(df: DataFrame, col: str, cap: int) -> DataFrame:
         # value_counts is its EXACT summary; merging then applying the uniform
         # subtraction of the (cap+1)-th largest weight is the standard
         # mergeable-summaries form of Misra-Gries: <= cap counters survive,
-        # est_count <= true count, and est >= true - n/(cap+1) — the same
-        # guarantee class as the row loop (tighter bound), and EXACTLY equal
-        # to it whenever the distinct count stays within cap (every oracled
-        # consumer's regime: no subtraction ever fires, counts are exact).
+        # est_count <= true count, and est >= true - n/(cap+1) - (clip term,
+        # below) — the same guarantee class as the row loop, and EXACTLY
+        # equal to it whenever the distinct count stays within cap (every
+        # oracled consumer's regime: no subtraction ever fires, counts are
+        # exact).
         counters: "pd.Series | None" = None
         n_rows = 0
         for pdf in it:
             s = pdf[col]
             n_rows += len(s)
+            # missing values are not items: dropna() skips None and also
+            # float NaN, which the row loop counted as the item "nan" — a
+            # nullable numeric key's NaNs never enter the summary
             vc = s.dropna().astype(str).value_counts()
             if len(vc) == 0:
                 continue
@@ -159,7 +163,10 @@ def _mg_summaries(df: DataFrame, col: str, cap: int) -> DataFrame:
                 # fully-uniform merge must not empty the summary — downstream
                 # flat-corpus diagnostics key off the kth candidate's weight);
                 # weight 1 <= any present item's true count, so est_count <=
-                # true still holds everywhere.
+                # true still holds everywhere. The floor also spares survivors
+                # tied at the cut weight part of the decrement, so the lower
+                # bound above loosens by up to cap per overflowing merge per
+                # partition (consumers guard with n/cap).
                 mdf = (
                     merged.rename_axis("item")
                     .reset_index(name="w")

@@ -18,55 +18,104 @@ from ..plans.ranking import distributed_row_number
 def deduplicate_events(events: DataFrame) -> DataFrame:
     """DDP1: at-least-once upstream delivery (retry loop EventLogger.java:196-210) makes
     duplicates possible; canonical dedup key is (QueryId, EventType). Deterministic:
-    keeps the earliest event timestamp rather than an arbitrary row."""
+    keeps the earliest event timestamp rather than an arbitrary row.
+
+    The rows are hash-partitioned on QueryId alone before the window: that one
+    exchange satisfies the window's (QueryId, EventType) distribution and leaves a
+    query's submission and completion in the same partition, sorted together, which
+    is what lets correlate_submit_complete pair them without another exchange."""
     ts = F.coalesce(F.col("StartTime"), F.col("EndTime"))
     w = Window.partitionBy("QueryId", "EventType").orderBy(ts.asc_nulls_last())
     return (
-        events.withColumn("_rn", F.row_number().over(w))
+        events.repartition("QueryId")
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
 
 
+# Columns each side of a pair contributes. The completion's Queue is the post-event
+# Queue overwrite (:162) and comes out as FinalQueue.
+_SUBMIT_COLS = (
+    "QueryType",
+    "QueryText",
+    "ExecutionMode",
+    "ExecutionEngine",
+    "RequestUser",
+    "UserName",
+    "Queue",
+    "StartTime",
+    "TablesRead",
+    "TablesWritten",
+    "DatabasesRead",
+    "DatabasesWritten",
+    "DefaultDatabase",
+    "SessionId",
+)
+_COMPLETE_COLS = (
+    ("EndTime", "EndTime"),
+    ("Status", "Status"),
+    ("ErrorMessage", "ErrorMessage"),
+    ("PerfObject", "PerfObject"),
+    ("CountersObject", "CountersObject"),
+    ("YarnApplicationId", "YarnApplicationId"),
+    ("Queue", "FinalQueue"),
+    ("HiveHostName", "HiveHostName"),
+)
+# how -> which QueryIds survive, given (has a submission, has a completion).
+_KEEP = {
+    "left": lambda sub, comp: sub,
+    "right": lambda sub, comp: comp,
+    "inner": lambda sub, comp: sub & comp,
+    "full": lambda sub, comp: sub | comp,
+}
+
+
 def correlate_submit_complete(events: DataFrame, how: str = "left") -> DataFrame:
     """JN1: pair each QUERY_SUBMITTED with its QUERY_COMPLETED on QueryId and derive
-    duration/status. Left join keeps never-completed submissions (NULL EndTime).
+    duration/status. ``how`` keeps the join vocabulary: ``left`` (the default) keeps
+    never-completed submissions with NULL completion columns, ``right`` keeps
+    completion-only ids, ``inner`` only complete pairs, ``full`` both; anything else
+    raises ValueError.
 
-    Scale: an equi self-join on QueryId — sort-merge under AQE; both sides are
-    pre-projected to only the columns each contributes, so the shuffle carries the
-    minimum payload. Skewed QueryIds can't exist (ids are unique per side after DDP1).
+    Input contract: ``events`` is the output of deduplicate_events (every caller
+    passes exactly that), so each QueryId has at most one row per EventType and
+    every picked column is that row's value. Events with a NULL QueryId have no
+    pairing key and are dropped under every ``how``.
+
+    Scale: one aggregate per QueryId instead of a filter/filter/self-join. Each
+    column is ``first(when(EventType == side, col), ignorenulls)`` so column
+    pruning still reaches the scan, and two presence flags implement ``how``.
+    On deduplicate_events' output the aggregate needs neither an exchange nor a
+    sort: the rows are already hash-partitioned on QueryId and sorted by it, so it
+    runs as a SortAggregate in the window's stage. At 100 TB the deduplicated
+    events cross the network once, in deduplicate_events' exchange.
     """
-    sub = events.filter(F.col("EventType") == EVENT_QUERY_SUBMITTED).select(
-        "QueryId",
-        "QueryType",
-        "QueryText",
-        "ExecutionMode",
-        "ExecutionEngine",
-        "RequestUser",
-        "UserName",
-        "Queue",
-        "StartTime",
-        "TablesRead",
-        "TablesWritten",
-        "DatabasesRead",
-        "DatabasesWritten",
-        "DefaultDatabase",
-        "SessionId",
+    if how not in _KEEP:
+        raise ValueError(f"how must be one of {sorted(_KEEP)}, got {how!r}")
+    is_sub = F.col("EventType") == EVENT_QUERY_SUBMITTED
+    is_comp = F.col("EventType") == EVENT_QUERY_COMPLETED
+
+    def pick(side, col, name):
+        return F.first(F.when(side, F.col(col)), ignorenulls=True).alias(name)
+
+    paired = (
+        events.filter(F.col("QueryId").isNotNull())
+        .groupBy("QueryId")
+        .agg(
+            *(pick(is_sub, c, c) for c in _SUBMIT_COLS),
+            *(pick(is_comp, c, name) for c, name in _COMPLETE_COLS),
+            F.max(is_sub).alias("_has_sub"),
+            F.max(is_comp).alias("_has_comp"),
+        )
     )
-    comp = events.filter(F.col("EventType") == EVENT_QUERY_COMPLETED).select(
-        "QueryId",
-        "EndTime",
-        "Status",
-        "ErrorMessage",
-        "PerfObject",
-        "CountersObject",
-        "YarnApplicationId",
-        F.col("Queue").alias("FinalQueue"),  # post-event Queue overwrite (:162)
-        "HiveHostName",
-    )
-    return sub.join(comp, "QueryId", how).withColumn(
-        "DurationMillis",
-        (F.unix_millis(F.col("EndTime")) - F.unix_millis(F.col("StartTime"))).cast("long"),
+    return (
+        paired.filter(_KEEP[how](F.col("_has_sub"), F.col("_has_comp")))
+        .drop("_has_sub", "_has_comp")
+        .withColumn(
+            "DurationMillis",
+            (F.unix_millis(F.col("EndTime")) - F.unix_millis(F.col("StartTime"))).cast("long"),
+        )
     )
 
 

@@ -1,8 +1,8 @@
 """Physical-plan strategies: bucketing for shuffle-free co-located joins.
 
-At 100 TB the dominant cost of JN1 (QueryId self-join) and JN4 fact-fact edges is the
-shuffle. Bucketing both sides on the join key at write time makes the join a zipped
-per-bucket merge — zero Exchange in the plan (asserted in tests, not assumed).
+At 100 TB the dominant cost of JN4 fact-fact edges is the shuffle. Bucketing both sides
+on the join key at write time makes the join a zipped per-bucket merge — zero Exchange
+in the plan (asserted in tests, not assumed).
 
 The sink-side counterpart: `DatePartitionedSink` handles the date layout for scans;
 `save_bucketed` is the layout for *join-heavy* consumption. The same table can be kept

@@ -165,8 +165,8 @@ def distributed_quantiles(
     buckets = []  # (group..., lo, hi, n_rows, distinct candidate bucket)
     seen_b: set[tuple] = set()
     for key, h in counts.items():
+        n = sum(h.values())
         for qname, q in qs.items():
-            n = sum(h.values())
             k = max(1, math.ceil(q * n))
             below = 0
             for b in sorted(h):

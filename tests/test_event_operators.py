@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import random
 
 import pytest
 from pyspark.sql import functions as F
@@ -19,6 +20,7 @@ from hadoop_migration_assessment_tools_spark.operators.events import (
 from hadoop_migration_assessment_tools_spark.operators.correlate import (
     correlate_submit_complete,
     deduplicate_events,
+    query_log_rollups,
     table_access_frequency,
 )
 from hadoop_migration_assessment_tools_spark.functions.scalars import (
@@ -349,6 +351,144 @@ def test_dedup_and_correlate(spark):
     assert by_id["hive_query_id_0"]["DurationMillis"] == 500
     assert by_id["hive_query_id_5"]["EndTime"] is None  # orphan kept by left join
     assert by_id["hive_query_id_0"]["Status"] == "FAIL"
+
+
+def _self_join_reference(events, how):
+    """The filter/filter/self-join form correlate_submit_complete replaced: the
+    reference its one-aggregate pairing must reproduce."""
+    sub = events.filter(F.col("EventType") == "QUERY_SUBMITTED").select(
+        "QueryId", "QueryType", "QueryText", "ExecutionMode", "ExecutionEngine",
+        "RequestUser", "UserName", "Queue", "StartTime", "TablesRead", "TablesWritten",
+        "DatabasesRead", "DatabasesWritten", "DefaultDatabase", "SessionId",
+    )
+    comp = events.filter(F.col("EventType") == "QUERY_COMPLETED").select(
+        "QueryId", "EndTime", "Status", "ErrorMessage", "PerfObject", "CountersObject",
+        "YarnApplicationId", F.col("Queue").alias("FinalQueue"), "HiveHostName",
+    )
+    return sub.join(comp, "QueryId", how).withColumn(
+        "DurationMillis",
+        (F.unix_millis(F.col("EndTime")) - F.unix_millis(F.col("StartTime"))).cast("long"),
+    )
+
+
+def _random_log(spark, seed, n=80):
+    """Seeded QueryEvents log: complete pairs, orphan submissions, completion-only
+    ids, NULL Start/EndTimes and repeated deliveries of the same record."""
+    rng = random.Random(seed)
+
+    def pick(*values):
+        return rng.choice(values)
+
+    rows = []
+    for i in range(n):
+        qid = f"q{seed}_{i}"
+        r = rng.random()
+        start = None if rng.random() < 0.1 else _ms(rng.randrange(10**9))
+        events = []
+        if r >= 0.15:  # the rest are completion-only ids
+            events.append(
+                dict(
+                    QueryId=qid,
+                    EventType="QUERY_SUBMITTED",
+                    QueryType=pick("QUERY", "DDL"),
+                    QueryText=f"SELECT {i}",
+                    ExecutionMode=pick("TEZ", "MR", None),
+                    ExecutionEngine=pick("tez", "mr"),
+                    RequestUser=f"user_{rng.randrange(5)}",
+                    UserName=pick("hive", None),
+                    Queue=pick("root.etl", "root.adhoc", None),
+                    StartTime=start,
+                    TablesRead=[f"db@t{rng.randrange(4)}"] * rng.randrange(3),
+                    TablesWritten=pick([], ["db@sink"]),
+                    DatabasesRead=["db"],
+                    DefaultDatabase="db",
+                    SessionId=f"s{rng.randrange(3)}",
+                )
+            )
+        if r < 0.15 or r >= 0.3:  # 0.15-0.3: orphan submissions
+            end = None if rng.random() < 0.1 else _ms(rng.randrange(10**9))
+            events.append(
+                dict(
+                    QueryId=qid,
+                    EventType="QUERY_COMPLETED",
+                    EndTime=end,
+                    Status=pick("SUCCESS", "FAIL", None),
+                    ErrorMessage=pick(None, "boom"),
+                    PerfObject=pick(None, '{"compile": 3}'),
+                    CountersObject=pick(None, "[]"),
+                    YarnApplicationId=pick(None, f"application_1_{i}"),
+                    Queue=pick("root.etl", "root.final", None),
+                    HiveHostName=pick("host-1", None),
+                    RequestUser=f"user_{rng.randrange(5)}",
+                )
+            )
+        for e in events:
+            for _ in range(pick(1, 1, 2, 3)):  # at-least-once delivery
+                row = {f.name: None for f in QUERY_EVENTS_SCHEMA.fields}
+                row.update(e)
+                for c in ("TablesRead", "TablesWritten", "PartitionsRead", "PartitionsWritten",
+                          "DatabasesRead", "DatabasesWritten"):
+                    row[c] = row[c] or []
+                rows.append(row)
+    rng.shuffle(rows)
+    return spark.createDataFrame(rows, schema=QUERY_EVENTS_SCHEMA)
+
+
+@pytest.mark.parametrize("how", ["left", "inner", "right", "full"])
+def test_correlate_matches_self_join(spark, how):
+    """The one-aggregate pairing returns exactly the self-join's rows and columns on
+    deduplicated logs with orphans, completion-only ids, NULL timestamps and
+    duplicate deliveries."""
+    for seed in (1, 2):
+        ded = deduplicate_events(_random_log(spark, seed))
+        got = correlate_submit_complete(ded, how)
+        want = _self_join_reference(ded, how)
+        assert got.columns == want.columns
+        got_rows = sorted(got.collect(), key=lambda r: r.QueryId)
+        want_rows = sorted(want.collect(), key=lambda r: r.QueryId)
+        assert got_rows == want_rows, (seed, how)
+        assert len(want_rows) > 0
+
+
+def test_correlate_rejects_unknown_how(spark):
+    ev = _synthetic_events(spark)
+    for how in ("outer", "left_semi", "cross", ""):
+        with pytest.raises(ValueError):
+            correlate_submit_complete(ev, how)
+
+
+def test_correlate_drops_null_query_ids(spark):
+    """A NULL QueryId is no pairing key: such events are dropped under every how."""
+    ev = _synthetic_events(spark)
+    no_id = ev.withColumn("QueryId", F.lit(None).cast("string"))
+    ded = deduplicate_events(ev.unionByName(no_id))
+    for how in ("left", "inner", "right", "full"):
+        rows = correlate_submit_complete(ded, how).collect()
+        assert all(r.QueryId is not None for r in rows), how
+        assert len(rows) == correlate_submit_complete(deduplicate_events(ev), how).count()
+
+
+def test_repeated_report_reuses_generated_code(spark):
+    """A repeated assessment report (dedup -> correlate -> three rollups -> table
+    frequency) compiles no new code: its generated sources all fit the session's
+    codegen cache (spark.sql.codegen.cache.maxEntries, session.py). At Spark's
+    default of 100 entries the report cycles the cache and recompiles every pass."""
+    compilations = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    ev = _synthetic_events(spark)
+
+    def report():
+        ded = deduplicate_events(ev)
+        cor = correlate_submit_complete(ded)
+        query_log_rollups(cor, "RequestUser").collect()
+        query_log_rollups(cor, "Queue", "ExecutionMode").collect()
+        by_day = cor.withColumn("EventDate", F.to_date("StartTime"))
+        query_log_rollups(by_day, "EventDate", "Status").collect()
+        table_access_frequency(ded).collect()
+
+    report()
+    before = compilations.getCount()
+    report()
+    assert compilations.getCount() - before == 0
 
 
 def test_table_access_frequency(spark):

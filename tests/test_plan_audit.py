@@ -183,8 +183,19 @@ PLAN_SIGNATURES: dict[str, dict[str, int]] = {
     "docs_contamination_ratio": dict(
         shuffle_exchange=6, broadcast_exchange=3, bnlj=0, cartesian=0, smj=1, bhj=3, shj=0, window=0
     ),
+    # JN1 as one aggregate (operators/correlate.py): deduplicate_events hash-
+    # partitions on QueryId once and correlate_submit_complete pairs each id's
+    # submission and completion in a SortAggregate on the window's output — no
+    # filter/filter/self-join, so the dedup runs once instead of once per side
+    # (re-pinned from shuffle 2 / broadcast 1 / bhj 1 / window 6).
     "qe_submit_complete_join": dict(
-        shuffle_exchange=2, broadcast_exchange=1, bnlj=0, cartesian=0, smj=0, bhj=1, shj=0, window=6
+        shuffle_exchange=1, broadcast_exchange=0, bnlj=0, cartesian=0, smj=0, bhj=0, shj=0, window=2
+    ),
+    # The assessment rollup over the same pairing: the one dedup exchange, the
+    # rollup's groupBy exchange and the output-order range exchange. A returning
+    # self-join shows up here as an extra exchange plus a join.
+    "qe_user_rollup": dict(
+        shuffle_exchange=3, broadcast_exchange=0, bnlj=0, cartesian=0, smj=0, bhj=0, shj=0, window=2
     ),
     "docs_exact_dedup": dict(
         shuffle_exchange=2, broadcast_exchange=0, bnlj=0, cartesian=0, smj=0, bhj=0, shj=0, window=0

@@ -74,6 +74,12 @@ def main() -> None:
     every = 30
     if "--every" in argv:
         every = int(argv[argv.index("--every") + 1])
+    probes = PROBES
+    if "--probes" in argv:
+        probes = [p for p in argv[argv.index("--probes") + 1].split(",") if p]
+        unknown = [p for p in probes if p not in QUERIES]
+        if unknown:
+            sys.exit(f"unknown --probes queries: {', '.join(unknown)}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", DEFAULT_SF_DIR)
     spark = get_spark(app_name="age-probe", master=f"local[{DEFAULT_CPUS}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -81,7 +87,7 @@ def main() -> None:
 
     def probe(tag: str) -> None:
         times = {}
-        for name in PROBES:
+        for name in probes:
             t0 = time.perf_counter()
             QUERIES[name](spark, sf_dir).count()
             times[name] = round(time.perf_counter() - t0, 3)
