@@ -8,11 +8,18 @@ the table-frequency explode the defining consumption semantics.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.window import Window
 
 from ..config import EVENT_QUERY_COMPLETED, EVENT_QUERY_SUBMITTED
 from ..plans.ranking import distributed_row_number
+from ..session import per_session
+
+
+def _dedup_columns() -> tuple[Column, Column]:
+    ts = F.coalesce(F.col("StartTime"), F.col("EndTime"))
+    w = Window.partitionBy("QueryId", "EventType").orderBy(ts.asc_nulls_last())
+    return F.row_number().over(w), F.col("_rn") == 1
 
 
 def deduplicate_events(events: DataFrame) -> DataFrame:
@@ -24,12 +31,11 @@ def deduplicate_events(events: DataFrame) -> DataFrame:
     exchange satisfies the window's (QueryId, EventType) distribution and leaves a
     query's submission and completion in the same partition, sorted together, which
     is what lets correlate_submit_complete pair them without another exchange."""
-    ts = F.coalesce(F.col("StartTime"), F.col("EndTime"))
-    w = Window.partitionBy("QueryId", "EventType").orderBy(ts.asc_nulls_last())
+    rn, first = per_session(events.sparkSession, _dedup_columns)
     return (
         events.repartition("QueryId")
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
+        .withColumn("_rn", rn)
+        .filter(first)
         .drop("_rn")
     )
 
@@ -71,6 +77,25 @@ _KEEP = {
 }
 
 
+def _correlate_columns() -> tuple[Column, list[Column], dict[str, Column], Column]:
+    is_sub = F.col("EventType") == EVENT_QUERY_SUBMITTED
+    is_comp = F.col("EventType") == EVENT_QUERY_COMPLETED
+
+    def pick(side, col, name):
+        return F.first(F.when(side, F.col(col)), ignorenulls=True).alias(name)
+
+    picks = [
+        *(pick(is_sub, c, c) for c in _SUBMIT_COLS),
+        *(pick(is_comp, c, name) for c, name in _COMPLETE_COLS),
+        F.max(is_sub).alias("_has_sub"),
+        F.max(is_comp).alias("_has_comp"),
+    ]
+    has_sub, has_comp = F.col("_has_sub"), F.col("_has_comp")
+    keep = {how: rule(has_sub, has_comp) for how, rule in _KEEP.items()}
+    duration = (F.unix_millis(F.col("EndTime")) - F.unix_millis(F.col("StartTime"))).cast("long")
+    return F.col("QueryId").isNotNull(), picks, keep, duration
+
+
 def correlate_submit_complete(events: DataFrame, how: str = "left") -> DataFrame:
     """JN1: pair each QUERY_SUBMITTED with its QUERY_COMPLETED on QueryId and derive
     duration/status. ``how`` keeps the join vocabulary: ``left`` (the default) keeps
@@ -89,34 +114,31 @@ def correlate_submit_complete(events: DataFrame, how: str = "left") -> DataFrame
     On deduplicate_events' output the aggregate needs neither an exchange nor a
     sort: the rows are already hash-partitioned on QueryId and sorted by it, so it
     runs as a SortAggregate in the window's stage. At 100 TB the deduplicated
-    events cross the network once, in deduplicate_events' exchange.
+    events cross the network once, in deduplicate_events' exchange. The Columns
+    (the picks, the flags, the four ``how`` filters) are built once per
+    SparkSession.
     """
     if how not in _KEEP:
         raise ValueError(f"how must be one of {sorted(_KEEP)}, got {how!r}")
-    is_sub = F.col("EventType") == EVENT_QUERY_SUBMITTED
-    is_comp = F.col("EventType") == EVENT_QUERY_COMPLETED
-
-    def pick(side, col, name):
-        return F.first(F.when(side, F.col(col)), ignorenulls=True).alias(name)
-
-    paired = (
-        events.filter(F.col("QueryId").isNotNull())
-        .groupBy("QueryId")
-        .agg(
-            *(pick(is_sub, c, c) for c in _SUBMIT_COLS),
-            *(pick(is_comp, c, name) for c, name in _COMPLETE_COLS),
-            F.max(is_sub).alias("_has_sub"),
-            F.max(is_comp).alias("_has_comp"),
-        )
-    )
+    has_id, picks, keep, duration = per_session(events.sparkSession, _correlate_columns)
     return (
-        paired.filter(_KEEP[how](F.col("_has_sub"), F.col("_has_comp")))
+        events.filter(has_id)
+        .groupBy("QueryId")
+        .agg(*picks)
+        .filter(keep[how])
         .drop("_has_sub", "_has_comp")
-        .withColumn(
-            "DurationMillis",
-            (F.unix_millis(F.col("EndTime")) - F.unix_millis(F.col("StartTime"))).cast("long"),
-        )
+        .withColumn("DurationMillis", duration)
     )
+
+
+def _rollup_aggregates() -> list[Column]:
+    return [
+        F.count(F.lit(1)).cast("long").alias("query_count"),
+        F.sum(F.when(F.col("Status") == "FAIL", 1).otherwise(0)).cast("long").alias("failed_count"),
+        F.round(F.avg("DurationMillis"), 3).alias("avg_duration_ms"),
+        F.max("DurationMillis").alias("max_duration_ms"),
+        F.approx_count_distinct("QueryId").alias("approx_distinct_queries"),
+    ]
 
 
 def query_log_rollups(correlated: DataFrame, *group_cols: str) -> DataFrame:
@@ -125,15 +147,8 @@ def query_log_rollups(correlated: DataFrame, *group_cols: str) -> DataFrame:
     one cheap shuffle regardless of input size."""
     if not group_cols:
         group_cols = ("RequestUser",)
-    return (
-        correlated.groupBy(*group_cols)
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("query_count"),
-            F.sum(F.when(F.col("Status") == "FAIL", 1).otherwise(0)).cast("long").alias("failed_count"),
-            F.round(F.avg("DurationMillis"), 3).alias("avg_duration_ms"),
-            F.max("DurationMillis").alias("max_duration_ms"),
-            F.approx_count_distinct("QueryId").alias("approx_distinct_queries"),
-        )
+    return correlated.groupBy(*group_cols).agg(
+        *per_session(correlated.sparkSession, _rollup_aggregates)
     )
 
 
@@ -144,7 +159,11 @@ def table_access_frequency(events: DataFrame) -> DataFrame:
 
     hot_rank is a two-phase distributed rank (plans/ranking.py), not a global
     no-partitionBy Window: a large estate can have millions of distinct tables, and
-    the single-task global window would be the scale bottleneck of this query."""
+    the single-task global window would be the scale bottleneck of this query.
+
+    Not lazy: the rank's local checkpoint runs the read, the dedup and this
+    aggregate's shuffle stages as Spark jobs when this function is called, before
+    any action on its result (plans/ranking.py)."""
     sub = events.filter(F.col("EventType") == EVENT_QUERY_SUBMITTED)
     reads = sub.select(F.explode("TablesRead").alias("table_name")).withColumn(
         "is_write", F.lit(0)
@@ -182,10 +201,7 @@ def merge_rollup_increment(
     At 100 TB this is THE difference between re-scanning the corpus per refresh and
     touching only the delta: the merge input is |groups| rows, not |events| rows.
     """
-    from pyspark.sql import functions as F
-
-    delta_agg = delta
-    merged = base_agg.unionByName(delta_agg)
+    merged = base_agg.unionByName(delta)
     return merged.groupBy(*group_cols).agg(
         F.sum("n").cast("long").alias("n"),
         F.sum("total").alias("total"),

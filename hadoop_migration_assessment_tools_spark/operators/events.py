@@ -35,7 +35,8 @@ from ..config import (
     STATUS_SUCCESS,
 )
 from ..functions.scalars import coalesce_user, mr_job_to_application_id
-from ..schema import QUERY_EVENTS_SCHEMA
+from ..schema import HOOK_INPUT_SCHEMA, QUERY_EVENTS_SCHEMA
+from ..session import per_session
 
 def _null_str() -> Column:
     return F.lit(None).cast("string")
@@ -138,8 +139,7 @@ def determine_application_id(mode: Column, tasks: Column, tez_session_app_id: Co
     )
 
 
-def _shared_identity_cols(df_cols: dict[str, Column]) -> dict[str, Column]:
-    c = df_cols
+def _shared_identity_cols(c: dict[str, Column]) -> dict[str, Column]:
     return {
         "QueryId": c["query_id"],
         "UserName": c["ugi_user_name"],  # OS short name (:303-305)
@@ -149,10 +149,12 @@ def _shared_identity_cols(df_cols: dict[str, Column]) -> dict[str, Column]:
     }
 
 
-def pre_hook_event(df: DataFrame) -> DataFrame:
-    """PRJ1 (EventRecordConstructor.java:94-132): the 27-column QUERY_SUBMITTED projection.
-    Pure narrow map — no shuffle; safe at any scale."""
-    c = {name: F.col(name) for name in df.columns}
+def _hook_cols() -> dict[str, Column]:
+    return {f.name: F.col(f.name) for f in HOOK_INPUT_SCHEMA.fields}
+
+
+def _pre_hook_projection() -> list[Column]:
+    c = _hook_cols()
     mode = classify_execution_mode(c["tasks"])
     cols = _shared_identity_cols(c) | {
         "QueryType": c["query_type"],
@@ -178,16 +180,11 @@ def pre_hook_event(df: DataFrame) -> DataFrame:
         "DatabasesWritten": extract_entity_names(c["outputs"], "DATABASE"),
         "DefaultDatabase": c["default_db"],
     }
-    return _project_to_schema(df, cols)
+    return _schema_projection(cols)
 
 
-def post_hook_event(df: DataFrame, yarn_applications: DataFrame | None = None) -> DataFrame:
-    """PRJ2 + AGG1-3 + JN2/JN3 (EventRecordConstructor.java:134-172): the QUERY_COMPLETED
-    projection. Status derives from the hook type (:85-87). The reference's per-query
-    ResourceManager RPC (YarnApplicationRetriever.java:38-50) becomes a broadcast left
-    join against an `applications(application_id, host, queue)` lookup table — no
-    per-row RPC, scales to any event volume."""
-    c = {name: F.col(name) for name in df.columns}
+def _post_hook_projection() -> list[Column]:
+    c = _hook_cols()
     mode = classify_execution_mode(c["tasks"])
     app_id = determine_application_id(
         mode, c["tasks"], c["tez_session_app_id"], c["llap_app_id"]
@@ -206,7 +203,24 @@ def post_hook_event(df: DataFrame, yarn_applications: DataFrame | None = None) -
         ),
         "YarnApplicationId": app_id,
     }
-    out = _project_to_schema(df, cols)
+    return _schema_projection(cols)
+
+
+def pre_hook_event(df: DataFrame) -> DataFrame:
+    """PRJ1 (EventRecordConstructor.java:94-132): the 27-column QUERY_SUBMITTED projection.
+    Pure narrow map — no shuffle; safe at any scale. The projection is built once per
+    SparkSession (session.per_session)."""
+    return df.select(*per_session(df.sparkSession, _pre_hook_projection))
+
+
+def post_hook_event(df: DataFrame, yarn_applications: DataFrame | None = None) -> DataFrame:
+    """PRJ2 + AGG1-3 + JN2/JN3 (EventRecordConstructor.java:134-172): the QUERY_COMPLETED
+    projection. Status derives from the hook type (:85-87). The reference's per-query
+    ResourceManager RPC (YarnApplicationRetriever.java:38-50) becomes a broadcast left
+    join against an `applications(application_id, host, queue)` lookup table — no
+    per-row RPC, scales to any event volume. The projection is built once per
+    SparkSession; the join is built per call."""
+    out = df.select(*per_session(df.sparkSession, _post_hook_projection))
     if yarn_applications is not None:
         # JN2: enrich host + queue from the applications lookup (broadcast — dim-sized).
         apps = F.broadcast(
@@ -229,11 +243,11 @@ def as_query_events(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
     """Public projection into the 33-field QueryEvents shape: provide any subset of
     fields as Columns, the rest become typed nulls — GenericRecordBuilder defaults
     (SURVEY §1.4). Useful for adapting arbitrary sources into the event model."""
-    return _project_to_schema(df, cols)
+    return df.select(*_schema_projection(cols))
 
 
-def _project_to_schema(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
-    """Project to the full 33-field QUERY_EVENTS_SCHEMA, nulling absent fields —
+def _schema_projection(cols: dict[str, Column]) -> list[Column]:
+    """The full 33-field QUERY_EVENTS_SCHEMA projection, nulling absent fields —
     nullability-first, exactly like GenericRecordBuilder defaults (SURVEY §1.4)."""
     out = []
     for field in QUERY_EVENTS_SCHEMA.fields:
@@ -241,7 +255,16 @@ def _project_to_schema(df: DataFrame, cols: dict[str, Column]) -> DataFrame:
         if col is None:
             col = F.lit(None).cast(field.dataType)
         out.append(col.cast(field.dataType).alias(field.name))
-    return df.select(*out)
+    return out
+
+
+def _dispatch_predicates() -> tuple[Column, Column, Column]:
+    hook_type = F.col("hook_type")
+    return (
+        F.col("query_id").isNotNull(),
+        hook_type == "PRE_EXEC_HOOK",
+        hook_type.isin("POST_EXEC_HOOK", "ON_FAILURE_HOOK"),
+    )
 
 
 def construct_events(
@@ -249,11 +272,12 @@ def construct_events(
 ) -> DataFrame:
     """SRC1 dispatch (EventRecordConstructor.java:80-92 + EventLogger.java:138-142):
     null-plan guard (FLT4), hook-type gate (FLT5), then the pre/post projections unioned
-    into one QueryEvents stream. Works identically on batch and streaming DataFrames."""
-    alive = raw.filter(F.col("query_id").isNotNull())  # FLT4 null-plan guard
-    pre = pre_hook_event(alive.filter(F.col("hook_type") == "PRE_EXEC_HOOK"))
-    post = post_hook_event(
-        alive.filter(F.col("hook_type").isin("POST_EXEC_HOOK", "ON_FAILURE_HOOK")),
-        yarn_applications,
-    )
+    into one QueryEvents stream. Works identically on batch and streaming DataFrames.
+
+    Every Column here is built once per SparkSession, so a call issues only its
+    filters, selects and union (under 100 Py4J round trips, not thousands)."""
+    has_plan, is_pre, is_post = per_session(raw.sparkSession, _dispatch_predicates)
+    alive = raw.filter(has_plan)  # FLT4 null-plan guard
+    pre = pre_hook_event(alive.filter(is_pre))
+    post = post_hook_event(alive.filter(is_post), yarn_applications)
     return pre.unionByName(post)

@@ -47,6 +47,12 @@ def distributed_row_number(
     # and ranks shift at partition boundaries. Observed on events at sf0.01 (8777
     # wrong ranks); the synthetic-data equality test never tripped it. The
     # checkpoint materializes the partitioning once; both branches read it.
+    # eager=False does not make it lazy under AQE (session.py turns AQE on):
+    # building the checkpoint's RDD plans the adaptive query, and that runs every
+    # shuffle stage below it. So this call runs Spark jobs before the caller's
+    # action: for table_access_frequency over the 10k-query benchmark log, 5 jobs
+    # (~1.1-1.5 s on 4 cores) when it is called, then 5 more (~0.3-0.4 s) in its
+    # collect().
     tagged = ranged.withColumn(
         "_range_pid", F.spark_partition_id()
     ).localCheckpoint(eager=False)

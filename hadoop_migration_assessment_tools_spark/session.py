@@ -17,10 +17,13 @@ Scale notes (local[32] test rig vs 1000-executor target):
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import SparkSession
 
 from .config import DEFAULT_CPUS
+
+T = TypeVar("T")
 
 
 def get_spark(
@@ -110,3 +113,23 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def per_session(spark: SparkSession, build: Callable[[], T]) -> T:
+    """``build()``, called once per SparkSession and then reused.
+
+    For an operator's expression trees, which depend only on column names, never on
+    the data. Building one in PySpark costs Py4J round trips (thousands for the
+    event projections); a reused Column is converted to Catalyst afresh on every
+    use, so it follows the session's current conf (e.g. ``spark.sql.ansi.enabled``)
+    and gets new alias exprIds each time. The cache lives on the session object,
+    like ``jvm_avro_available``'s probe result, so a stopped session's JVM objects
+    die with it and ``spark.newSession()`` builds its own. There is no lock: threads
+    that race on a first call each build, and any one result serves as well as
+    another."""
+    cache = getattr(spark, "_engine_per_session", None)
+    if cache is None:
+        cache = spark._engine_per_session = {}
+    if build not in cache:
+        cache[build] = build()
+    return cache[build]

@@ -10,13 +10,19 @@ Reference behavior being re-expressed (SURVEY §1.3, §2.1):
 Spark-native mapping:
 - day directory        → parquet: hive-style ``EventDate=YYYY-MM-DD`` via ``partitionBy``;
                          avro: bare ``YYYY-MM-DD`` dirs exactly like the reference
-- file-per-window      → parquet: ``maxRecordsPerFile``; avro: per-task
-                         ``RollingOcfWriterFactory`` with the reference's
-                         ``dwhassessment_<instant>_<loggerId>.avro`` naming
-- flush-per-record     → avro path flushes a block per record like the reference
-                         (DatePartitionedRecordsWriterFactory.java:106-107); parquet
-                         path commits per file (atomic-rename upgrade — SURVEY §7
-                         known hard part 4)
+- file-per-window      → parquet: ``maxRecordsPerFile``; avro: each task
+                         (``_avro_partition_writer``) keeps one open OCF file per
+                         day and starts a new one every ``rollover_records``
+                         records, with the reference's
+                         ``dwhassessment_<instant>_<loggerId>.avro`` naming; the
+                         rollover is by record count, not by the reference's clock
+- flush-per-record     → not replicated: the reference flushes a block per record
+                         (DatePartitionedRecordsWriterFactory.java:106-107); the
+                         avro path buffers a file's records and seals them as one
+                         block when it closes the file (a task that dies leaves
+                         its open files without records); the parquet path commits
+                         per file (atomic-rename upgrade — SURVEY §7 known hard
+                         part 4)
 - single writer thread → one task per output partition; each task is its own logger
                          instance with its own loggerId (SET1: many instances × days
                          × files read back as one dataset).

@@ -7,8 +7,10 @@ from __future__ import annotations
 import datetime as dt
 import json
 import random
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import functions as F
 
 from hadoop_migration_assessment_tools_spark.operators.events import (
@@ -498,6 +500,123 @@ def test_table_access_frequency(spark):
     assert freq["db@sink"]["read_count"] == 0
     assert freq["db@t0"]["read_count"] == 2  # i=0,3
     assert freq["db@sink"]["hot_rank"] == 1
+
+
+# --- expression trees built once per session (session.per_session) -----------------
+
+
+def _round_trips(monkeypatch, fn):
+    """Run fn() and count the Py4J commands this thread sends to the JVM meanwhile.
+    The finalizer thread's object releases go out on their own thread and are not
+    counted."""
+    sent = 0
+    me = threading.get_ident()
+    send = ClientServerConnection.send_command
+
+    def counting(self, command):
+        nonlocal sent
+        sent += threading.get_ident() == me
+        return send(self, command)
+
+    with monkeypatch.context() as m:
+        m.setattr(ClientServerConnection, "send_command", counting)
+        fn()
+    return sent
+
+
+def test_construct_events_builds_its_columns_once(spark, monkeypatch):
+    """A warm session builds construct_events' 66 output Columns (34 higher-order-
+    function lambdas among them) only once: a further call on a fresh hook DataFrame
+    issues just its filters, two selects and a union. Rebuilding them takes ~5,500
+    round trips."""
+    construct_events(make_input(spark))
+    fresh = make_input(spark, hook_type="POST_EXEC_HOOK")
+    assert _round_trips(monkeypatch, lambda: construct_events(fresh)) <= 100
+
+
+def test_report_chain_builds_its_columns_once(spark, monkeypatch):
+    """dedup -> correlate -> three rollups on a warm session. What is left per call is
+    mostly list arguments (Py4J sends one command per list element): ~125 round
+    trips against ~1,500 when every call rebuilds its Columns."""
+    ev = _synthetic_events(spark)
+
+    def chain():
+        cor = correlate_submit_complete(deduplicate_events(ev))
+        query_log_rollups(cor, "RequestUser")
+        query_log_rollups(cor, "Queue", "ExecutionMode")
+        query_log_rollups(cor, "Status", "ExecutionEngine")
+
+    chain()
+    assert _round_trips(monkeypatch, chain) <= 150
+
+
+def _hook_rows(spark, prefix):
+    tez = [{"task_type": "TEZ", "is_llap": False, "job_id": None}]
+    mr = [{"task_type": "MAPRED", "is_llap": None, "job_id": "job_1685098059769_7"}]
+    rows = []
+    for i, (tasks, outcome) in enumerate([(tez, "POST_EXEC_HOOK"), (mr, "ON_FAILURE_HOOK"), ([], None)]):
+        for hook_type in ("PRE_EXEC_HOOK", outcome):
+            if hook_type is not None:
+                r = dict(BASE_INPUT, query_id=f"{prefix}{i}", hook_type=hook_type, tasks=tasks)
+                r["inputs"] = [{"entity_type": "TABLE", "name": f"db@{prefix}{i}"}]
+                r["perf"] = {"compile": {"start_millis": 1000 * i, "duration_millis": 0}}
+                rows.append(r)
+    return spark.createDataFrame(rows, schema=HOOK_INPUT_SCHEMA)
+
+
+def test_reused_columns_in_one_plan(spark):
+    """The same cached Columns twice in one plan — a union of two inputs' events and
+    a self-join of one input's events — give the rows the parts give alone."""
+    a, b = construct_events(_hook_rows(spark, "a")), construct_events(_hook_rows(spark, "b"))
+    a_rows, b_rows = a.collect(), b.collect()
+    assert len(a_rows) == 5 and len(b_rows) == 5
+    assert sorted(a.unionByName(b).collect(), key=repr) == sorted(a_rows + b_rows, key=repr)
+
+    again = construct_events(_hook_rows(spark, "a"))
+    joined = (
+        a.alias("x")
+        .join(again.alias("y"), F.col("x.QueryId") == F.col("y.QueryId"))
+        .select("x.QueryId", "x.EventType", "x.ExecutionMode", "y.EventType", "y.Status")
+        .collect()
+    )
+    want = [
+        (x.QueryId, x.EventType, x.ExecutionMode, y.EventType, y.Status)
+        for x in a_rows
+        for y in a_rows
+        if x.QueryId == y.QueryId
+    ]
+    assert sorted(map(tuple, joined), key=repr) == sorted(want, key=repr)
+
+
+def test_cached_columns_follow_ansi_conf(spark):
+    """A Column is converted to Catalyst when a DataFrame uses it, under the conf of
+    that moment: Columns cached under ANSI mode wrap on overflow once it is off.
+    The overflow is the running-perf fallback, now - start, with start = Long.MIN."""
+    s = spark.newSession()
+    raw = make_input(
+        s, hook_type="POST_EXEC_HOOK",
+        perf={"x": {"start_millis": -(2**63), "duration_millis": 0}},
+    )
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    strict = construct_events(raw)
+    cached = dict(s._engine_per_session)
+    with pytest.raises(Exception, match="ARITHMETIC_OVERFLOW"):
+        strict.collect()
+    s.conf.set("spark.sql.ansi.enabled", "false")
+    row = construct_events(raw).collect()[0]
+    assert json.loads(row.PerfObject) == {"x": 9999 - 2**63}
+    assert all(s._engine_per_session[k] is v for k, v in cached.items())
+
+
+def test_new_session_builds_its_own_columns(spark):
+    """spark.newSession() gets its own cache and the same events."""
+    want = sorted(construct_events(_hook_rows(spark, "n")).collect(), key=repr)
+    s = spark.newSession()
+    assert not hasattr(s, "_engine_per_session")
+    assert sorted(construct_events(_hook_rows(s, "n")).collect(), key=repr) == want
+    mine, theirs = s._engine_per_session, spark._engine_per_session
+    assert mine.keys() <= theirs.keys()
+    assert all(mine[k] is not theirs[k] for k in mine)
 
 
 def test_writer_id_column_shape(spark):
