@@ -673,7 +673,8 @@ ORDER BY Queue
 # --- qe_avro_roundtrip --------------------------------------------------------------
 # SRC2/SRC3/SRC6 scored end to end: a subset of the synthetic log goes through the
 # REAL avro sink (distributed pure-Python OCF write, reference dir/file layout) and
-# the REAL avro reader (binaryFile + per-file decode), then aggregates per EventType.
+# the REAL avro reader (binaryFile + mapInArrow OCF decode), then aggregates per
+# EventType.
 # The oracle reproduces the same totals straight from orders — a hash match certifies
 # the whole persistence roundtrip: schema bridge, binary encoding, timestamp-millis
 # logical type, day routing, and the multi-file union (SET1).

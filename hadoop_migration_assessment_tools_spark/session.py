@@ -123,8 +123,8 @@ def per_session(spark: SparkSession, build: Callable[[], T]) -> T:
     event projections); a reused Column is converted to Catalyst afresh on every
     use, so it follows the session's current conf (e.g. ``spark.sql.ansi.enabled``)
     and gets new alias exprIds each time. The cache lives on the session object,
-    like ``jvm_avro_available``'s probe result, so a stopped session's JVM objects
-    die with it and ``spark.newSession()`` builds its own. There is no lock: threads
+    so a stopped session's JVM objects die with it and ``spark.newSession()``
+    builds its own. There is no lock: threads
     that race on a first call each build, and any one result serves as well as
     another."""
     cache = getattr(spark, "_engine_per_session", None)

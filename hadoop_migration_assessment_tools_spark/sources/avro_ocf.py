@@ -13,9 +13,10 @@ self-consistency.
 Scale design: the codec is the *per-file* serial path, exactly like the reference's
 single-writer ``DataFileWriter``. Distribution comes from Spark — one writer task
 per partition on write (``sink.py``) and one decode task per file on read
-(``binaryFile`` source → flatMap). Python-side decode is the honest cost of having
-no JVM datasource; it is Arrow-free but file-parallel, and event files are
-rollover-bounded (SRC4) so no single file is ever large.
+(``binaryFile`` source → ``readers.decode_avro_files``); rows cross between the JVM
+and the codec as Arrow batches (``mapInArrow``) both ways. Python-side coding is
+the honest cost of having no JVM datasource; it is file-parallel, and event files
+are rollover-bounded (SRC4) so no single file is ever large.
 
 Supported schema surface: everything QueryEvents needs plus the general cases —
 null, boolean, int, long, float, double, bytes, string, enum, fixed, record,
@@ -34,9 +35,11 @@ import secrets
 import string as _string
 import struct
 import zlib
-from typing import Any, Iterable, Iterator
+from typing import Any, Iterable
 
 from pyspark.sql import types as T
+
+from ..config import DWH_ASSESSMENT_FILE_PREFIX
 
 MAGIC = b"Obj\x01"
 SYNC_SIZE = 16
@@ -502,6 +505,16 @@ def format_log_instant(instant: dt.datetime) -> str:
     return base
 
 
+def ocf_file_name(instant: dt.datetime, logger_id: str, suffix: str = "") -> str:
+    """``dwhassessment_<LOG_TIME_FORMAT instant>_<loggerId>.avro``, the reference's
+    file name (DatePartitionedRecordsWriterFactory.java:208-214). ``suffix`` goes
+    before ``.avro``; compaction adds ``_<n>`` so the files one run writes in the
+    same instant do not collide."""
+    return (
+        f"{DWH_ASSESSMENT_FILE_PREFIX}{format_log_instant(instant)}_{logger_id}{suffix}.avro"
+    )
+
+
 class RollingOcfWriterFactory:
     """Date-partitioned, time-rolled OCF writer — the Spark-side twin of
     DatePartitionedRecordsWriterFactory.java:52-215 with the same observable contract:
@@ -513,8 +526,9 @@ class RollingOcfWriterFactory:
     - close-and-reopen on write failure is the caller's retry policy (EventLogger.java:196-239);
       here a failed write surfaces the exception after closing (write:109-114).
 
-    Used per-task by the distributed sink (each Spark task = one logger instance with
-    its own loggerId, mirroring many hook JVMs writing side by side — SET1).
+    This is the writer of one long-lived logger process, which rolls over by clock.
+    The Spark sink (sink.py) does not use it: each of its tasks is a logger instance
+    that rolls over by record count, and both name files with ``ocf_file_name``.
     """
 
     def __init__(
@@ -545,17 +559,6 @@ class RollingOcfWriterFactory:
         )
         return min(next_rollover, next_day)
 
-    def _construct_file_name(self) -> str:
-        from ..config import DWH_ASSESSMENT_FILE_PREFIX
-
-        return (
-            DWH_ASSESSMENT_FILE_PREFIX
-            + format_log_instant(self.clock.instant())
-            + "_"
-            + self.logger_id
-            + ".avro"
-        )
-
     def maybe_rollover(self) -> None:
         """Rollover-eligibility tick (EventLogger.java:112-121 → :117-133)."""
         if self.clock.instant() > self.rollover_time:
@@ -569,7 +572,9 @@ class RollingOcfWriterFactory:
                 self.base_dir, self.clock.instant().date().isoformat()
             )
             os.makedirs(date_dir, exist_ok=True)
-            self._current_path = os.path.join(date_dir, self._construct_file_name())
+            self._current_path = os.path.join(
+                date_dir, ocf_file_name(self.clock.instant(), self.logger_id)
+            )
             self._writer = OcfWriter(
                 open(self._current_path, "wb"), self.avsc, codec=self.codec
             )
@@ -614,14 +619,3 @@ def write_with_retries(
         except OSError:
             continue
     return False
-
-
-def decode_ocf_file_to_rows(
-    content: bytes, schema: T.StructType
-) -> Iterator[tuple]:
-    """Decode one OCF file into tuples aligned with ``schema`` (executor-side helper
-    for the binaryFile read path in readers.py)."""
-    _, records = read_ocf_bytes(content)
-    names = [f.name for f in schema.fields]
-    for rec in records:
-        yield tuple(rec.get(n) for n in names)

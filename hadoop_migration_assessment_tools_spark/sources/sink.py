@@ -38,13 +38,16 @@ from __future__ import annotations
 import os
 from typing import Iterator
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F, types as T
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import DEFAULT_ROLLOVER_INTERVAL_SECONDS
+from ..config import DEFAULT_ROLLOVER_INTERVAL_SECONDS, DWH_ASSESSMENT_FILE_PREFIX
 from ..functions.localrel import local_df
 
 PARTITION_COL = "EventDate"
+
+#: Block codec of every OCF file the sink and avro compaction write.
+AVRO_CODEC = "deflate"
 
 #: Reference day-dir mode: FsPermission.createImmutable((short) 1023) == 0o1777 —
 #: sticky + world-writable, so many logger instances running as different users can
@@ -86,51 +89,47 @@ def _avro_partition_writer(
     avsc: dict,
     partition_col: str,
     rollover_records: int | None,
-    codec: str,
 ):
-    """Executor-side closure: writes one partition's rows into per-day OCF files with
-    reference-faithful names. One loggerId per task (= one logger instance)."""
+    """Executor-side ``mapInArrow`` function: writes one partition's rows into per-day
+    OCF files with reference-faithful names and yields the number written. One
+    loggerId per task (= one logger instance). Top-level times arrive as epoch
+    millis, which the codec stores as they are."""
 
-    def write_rows(rows: Iterator) -> Iterator[int]:
-        from .avro_ocf import OcfWriter, SystemClock, format_log_instant, generate_logger_id
+    def write_batches(batches: Iterator) -> Iterator:
+        import pyarrow as pa
+
+        from .avro_ocf import OcfWriter, SystemClock, generate_logger_id, ocf_file_name
+        from .readers import arrow_batch
 
         clock = SystemClock()
         logger_id = generate_logger_id()
-        from ..config import DWH_ASSESSMENT_FILE_PREFIX
-
         open_writers: dict[str, tuple[OcfWriter, int]] = {}
         written = 0
 
         def open_writer(day: str) -> OcfWriter:
             day_dir = os.path.join(base_dir, day)
             make_shared_day_dir(day_dir)
-            name = (
-                DWH_ASSESSMENT_FILE_PREFIX
-                + format_log_instant(clock.instant())
-                + "_"
-                + logger_id
-                + ".avro"
-            )
-            return OcfWriter(open(os.path.join(day_dir, name), "wb"), avsc, codec=codec)
+            name = ocf_file_name(clock.instant(), logger_id)
+            return OcfWriter(open(os.path.join(day_dir, name), "wb"), avsc, codec=AVRO_CODEC)
 
-        for row in rows:
-            d = row[partition_col]
-            day = d.isoformat() if d is not None else "__unknown_date__"
-            writer, count = open_writers.get(day, (None, 0))
-            if writer is None or (rollover_records and count >= rollover_records):
-                if writer is not None:
-                    writer.close()
-                writer, count = open_writer(day), 0
-            rec = row.asDict(recursive=True)
-            rec.pop(partition_col, None)  # the day lives in the dir name, not the record
-            writer.append(rec)
-            open_writers[day] = (writer, count + 1)
-            written += 1
+        for batch in batches:
+            # the record encoder picks fields by name, so the day column is not stored
+            for rec in batch.to_pylist():
+                d = rec[partition_col]
+                day = d.isoformat() if d is not None else "__unknown_date__"
+                writer, count = open_writers.get(day, (None, 0))
+                if writer is None or (rollover_records and count >= rollover_records):
+                    if writer is not None:
+                        writer.close()
+                    writer, count = open_writer(day), 0
+                writer.append(rec)
+                open_writers[day] = (writer, count + 1)
+                written += 1
         for writer, _ in open_writers.values():
             writer.close()
-        yield written
+        yield arrow_batch([{"written": written}], pa.schema([("written", pa.int64())]))
 
-    return write_rows
+    return write_batches
 
 
 class DatePartitionedSink:
@@ -146,7 +145,6 @@ class DatePartitionedSink:
         fmt: str = "parquet",
         rollover_records: int | None = 1_000_000,
         partition_col: str = PARTITION_COL,
-        avro_codec: str = "deflate",
     ) -> None:
         if fmt not in ("parquet", "avro"):
             raise ValueError(f"unsupported sink format {fmt!r}")
@@ -154,7 +152,6 @@ class DatePartitionedSink:
         self.fmt = fmt
         self.rollover_records = rollover_records
         self.partition_col = partition_col
-        self.avro_codec = avro_codec
 
     def write_batch(self, df: DataFrame, mode: str = "append", time_sorted: bool = True) -> None:
         """Batch write, partitioned by UTC event date (SRC3).
@@ -185,21 +182,29 @@ class DatePartitionedSink:
     def _write_batch_avro(self, df: DataFrame) -> int:
         """SRC2: distributed OCF write — one logger instance per Spark task, one file
         per (task, UTC day), named ``dwhassessment_<instant>_<loggerId>.avro`` exactly
-        like the reference (DatePartitionedRecordsWriterFactory.java:208-214)."""
+        like the reference (DatePartitionedRecordsWriterFactory.java:208-214). Rows
+        reach the writers as Arrow batches; top-level timestamps cross as
+        ``unix_millis``, the value timestamp-millis stores, so no time-zone
+        conversion happens in the Python worker."""
         from .avro_ocf import struct_to_avsc
 
         record_schema = df.drop(self.partition_col).schema
-        avsc = struct_to_avsc(record_schema)
-        counts = df.rdd.mapPartitions(
+        cols = [
+            F.unix_millis(f.name).alias(f.name)
+            if isinstance(f.dataType, T.TimestampType)
+            else F.col(f.name)
+            for f in record_schema.fields
+        ]
+        written = df.select(*cols, self.partition_col).mapInArrow(
             _avro_partition_writer(
                 self.base_dir,
-                avsc,
+                struct_to_avsc(record_schema),
                 self.partition_col,
                 self.rollover_records,
-                self.avro_codec,
-            )
-        ).collect()
-        return sum(counts)
+            ),
+            "written long",
+        )
+        return sum(r.written for r in written.collect())
 
     def write_stream(
         self,
@@ -274,8 +279,8 @@ def compact_log_tree(
     fmt='avro' compacts the reference-layout OCF tree instead: per UTC-day dir,
     the dwhassessment_* files are merged (filename order = instant order, so
     record order is preserved across rollover boundaries) into new
-    dwhassessment_<instant>_<loggerId>.avro files of up to ``avro_max_records``
-    records — same dirs, same naming contract, fewer files (VERDICT r3 missing #4).
+    dwhassessment_<instant>_<loggerId>_<n>.avro files of up to 1,000,000 records
+    — same dirs, same naming contract, fewer files (VERDICT r3 missing #4).
     """
     if fmt == "avro":
         return _compact_avro_tree(spark, path)
@@ -351,18 +356,19 @@ def _compact_avro_tree(spark, path: str, max_records: int = 1_000_000) -> dict:
         for d in glob.glob(os.path.join(path, "*"))
         if os.path.isdir(d) and not d.endswith(("__compact_staging", "__old"))
     )
-    files_before = len(glob.glob(os.path.join(path, "*", "dwhassessment_*.avro")))
+    ocf_glob = DWH_ASSESSMENT_FILE_PREFIX + "*.avro"
+    files_before = len(glob.glob(os.path.join(path, "*", ocf_glob)))
 
     def compact_day(day_dir: str) -> int:
         from .avro_ocf import (
             OcfWriter,
             SystemClock,
-            format_log_instant,
             generate_logger_id,
+            ocf_file_name,
             read_ocf,
         )
 
-        files = sorted(glob.glob(os.path.join(day_dir, "dwhassessment_*.avro")))
+        files = sorted(glob.glob(os.path.join(day_dir, ocf_glob)))
         if len(files) <= 1:
             return 0
         avsc = None
@@ -377,15 +383,9 @@ def _compact_avro_tree(spark, path: str, max_records: int = 1_000_000) -> dict:
         clock, logger_id = SystemClock(), generate_logger_id()
         out_n = 0
         for start in range(0, len(records), max_records):
-            name = (
-                "dwhassessment_"
-                + format_log_instant(clock.instant())
-                + "_"
-                + logger_id
-                + f"_{out_n}.avro"
-            )
+            name = ocf_file_name(clock.instant(), logger_id, f"_{out_n}")
             with open(os.path.join(staging, name), "wb") as fobj:
-                w = OcfWriter(fobj, avsc, codec="deflate")
+                w = OcfWriter(fobj, avsc, codec=AVRO_CODEC)
                 for rec in records[start : start + max_records]:
                     w.append(rec)
                 w.close()
@@ -411,7 +411,7 @@ def _compact_avro_tree(spark, path: str, max_records: int = 1_000_000) -> dict:
         rows = 0
     return {
         "files_before": files_before,
-        "files_after": len(glob.glob(os.path.join(path, "*", "dwhassessment_*.avro"))),
+        "files_after": len(glob.glob(os.path.join(path, "*", ocf_glob))),
         "rows": rows,
     }
 

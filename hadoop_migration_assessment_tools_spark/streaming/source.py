@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ..schema import QUERY_EVENTS_SCHEMA
+from ..sources.readers import decode_avro_files
 
 
 def read_event_stream(
@@ -39,19 +40,10 @@ def read_event_stream_avro(
     """Tail a reference-layout Avro tree (``<base>/<YYYY-MM-DD>/dwhassessment_*.avro``)
     as a stream — the consumption mode the reference's own downstream pipeline uses
     (new files appear per rollover window; SRC4). The ``binaryFile`` streaming source
-    tracks new files; each decodes executor-side with the built-in OCF codec
-    (sources/avro_ocf.py) inside ``mapInPandas`` — streaming-legal, Arrow-batched,
-    one file per input row so memory is bounded by rollover file size.
-
-    Returns QUERY_EVENTS_SCHEMA columns plus ``EventDate`` (from the day directory),
-    matching the batch reader's shape (readers.read_event_log fmt='avro')."""
-    from pyspark.sql import functions as F, types as T
-
-    from ..sources.avro_ocf import decode_ocf_file_to_rows
-
-    out_schema = T.StructType(
-        list(QUERY_EVENTS_SCHEMA.fields) + [T.StructField("EventDate", T.DateType(), True)]
-    )
+    tracks new files, and the batch reader's decoder
+    (``sources.readers.decode_avro_files``) turns them into rows, so a stream and a
+    batch read of the same tree give the same rows: QUERY_EVENTS_SCHEMA columns plus
+    ``EventDate`` from the day directory."""
     reader = (
         spark.readStream.format("binaryFile")
         # streaming sources require an explicit schema; binaryFile's is fixed
@@ -61,29 +53,7 @@ def read_event_stream_avro(
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    binary = reader.load(path).select("path", "content")
-
-    names = [f.name for f in out_schema.fields]
-
-    def decode(batches):
-        import datetime as dt
-        import os
-
-        import pandas as pd
-
-        for pdf in batches:
-            rows = []
-            for p, content in zip(pdf["path"], pdf["content"]):
-                parent = os.path.basename(os.path.dirname(p))
-                try:
-                    day = dt.date.fromisoformat(parent)
-                except ValueError:
-                    day = None
-                for tup in decode_ocf_file_to_rows(bytes(content), QUERY_EVENTS_SCHEMA):
-                    rows.append(tup + (day,))
-            yield pd.DataFrame(rows, columns=names)
-
-    return binary.mapInPandas(decode, schema=out_schema)
+    return decode_avro_files(reader.load(path))
 
 
 def read_events_table_stream(

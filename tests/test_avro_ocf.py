@@ -399,116 +399,138 @@ def test_avro_tree_read_skips_non_avro_files(spark, tmp_path):
     assert back.count() == 1
 
 
-def test_jvm_avro_probe_is_cached_and_falls_back(spark):
-    """The runtime dispatch for the deployment path (VERDICT r3 missing #1): the
-    probe resolves the real datasource (not just the class name), caches per
-    session, and in this sandbox routes read_event_log to the OCF fallback."""
-    from hadoop_migration_assessment_tools_spark.sources.readers import (
-        jvm_avro_available,
+def _batch_and_stream(spark, base, ckpt, *cols):
+    """``cols`` of the batch read and of a stream tailing the same tree, both sorted."""
+    from hadoop_migration_assessment_tools_spark.sources.readers import read_event_log
+    from hadoop_migration_assessment_tools_spark.streaming.source import (
+        read_event_stream_avro,
     )
 
-    first = jvm_avro_available(spark)
-    assert isinstance(first, bool)
-    assert jvm_avro_available(spark) is first  # cached
-    assert getattr(spark, "_engine_jvm_avro_available") is first
-
-
-def test_read_event_log_dispatches_both_avro_branches(spark, tmp_path, monkeypatch):
-    """VERDICT r5 #8: the JVM-avro deployment branch must not rot just because
-    this sandbox lacks the spark-avro JAR. Force the probe decision both ways
-    (via its per-session cache) and assert read_event_log routes to the JVM
-    tree reader when available and to the pure-Python OCF fallback when not."""
-    from hadoop_migration_assessment_tools_spark.sources import readers
-
-    calls = []
-
-    def fake_jvm_tree(spark_, path, schema=None, **kw):
-        calls.append(path)
-        return spark_.createDataFrame([], "QueryText string, EventDate date")
-
-    monkeypatch.setattr(readers, "_read_avro_tree_jvm", fake_jvm_tree)
-
-    # Branch 1: JVM datasource "available" -> must dispatch to the JVM reader.
-    spark._engine_jvm_avro_available = True
+    batch = read_event_log(spark, base, fmt="avro").select(*cols).collect()
+    name = "avro_tail_" + os.path.basename(ckpt)
+    q = (
+        read_event_stream_avro(spark, base).select(*cols)
+        .writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True).start()
+    )
     try:
-        out = readers.read_event_log(spark, str(tmp_path / "treeA"), fmt="avro")
-        assert calls == [str(tmp_path / "treeA")]
-        assert "EventDate" in out.columns
+        assert q.awaitTermination(180), "stream did not drain the tree"
+        stream = spark.table(name).collect()
     finally:
-        spark._engine_jvm_avro_available = False
-
-    # Branch 2: unavailable -> pure-Python OCF fallback (real decode, no mock).
-    import datetime as dtm
-
-    from hadoop_migration_assessment_tools_spark.sources.sink import DatePartitionedSink
-
-    row = {f.name: None for f in QUERY_EVENTS_SCHEMA.fields}
-    row.update(QueryId="q1", EventType="QUERY_SUBMITTED",
-               StartTime=dtm.datetime(2024, 3, 5, 9, 0))
-    df = spark.createDataFrame([row], schema=QUERY_EVENTS_SCHEMA)
-    DatePartitionedSink(str(tmp_path / "treeB"), fmt="avro").write_batch(df)
-    try:
-        got = readers.read_event_log(spark, str(tmp_path / "treeB"), fmt="avro")
-        rows = got.collect()
-        assert calls == [str(tmp_path / "treeA")]  # JVM reader NOT called again
-        assert len(rows) == 1 and str(rows[0]["EventDate"]) == "2024-03-05"
-    finally:
-        if hasattr(spark, "_engine_jvm_avro_available"):
-            del spark._engine_jvm_avro_available
+        q.stop()
+        spark.catalog.dropTempView(name)
+    return sorted(batch), sorted(stream)
 
 
-def test_jvm_avro_tree_reader_layout_via_parquet_standin(spark, tmp_path):
-    """Exercise the ENTIRE deployment-branch tree reader (recursive lookup, glob
-    filter, fixed schema, EventDate parsed from the day-dir name, non-date dirs
-    -> NULL) without the spark-avro JAR, through the _format/_glob test seam
-    with the parquet datasource standing in for avro."""
-    import datetime as dt
-
-    from pyspark.sql import types as T
-
-    from hadoop_migration_assessment_tools_spark.sources.readers import (
-        _read_avro_tree_jvm,
-    )
-
-    schema = T.StructType(
-        [
-            T.StructField("QueryText", T.StringType(), True),
-            T.StructField("DurationMs", T.LongType(), True),
-        ]
-    )
-    import glob
-    import shutil
-
+def test_avro_tree_event_date_from_day_dir(spark, tmp_path):
+    """EventDate is the day directory's name read as an ISO date, in batch and in
+    stream. "2024-99-99" has a date's shape but is no date; it and a foreign dir
+    degrade to EventDate=NULL and their rows still load."""
+    avsc = struct_to_avsc(QUERY_EVENTS_SCHEMA)
     base = tmp_path / "tree"
-    # reference layout puts files DIRECTLY in the day dir (<base>/<day>/x.avro),
-    # so copy the part file out of Spark's dataset directory into place
-    # "2024-99-99" matches the \d{4}-\d{2}-\d{2} extraction but is no real date:
-    # under ANSI a plain cast("date") failed the WHOLE tree read (r12 audit);
-    # it must degrade to EventDate=null like any other foreign dir
-    for day, qtext in [
+    for day, qid in [
         ("2024-01-02", "q1"),
         ("2024-02-28", "q2"),
         ("not-a-date", "qmisc"),
         ("2024-99-99", "qbad"),
     ]:
-        scratch = tmp_path / f"scratch_{qtext}"
-        spark.createDataFrame([(qtext, 5)], schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(str(scratch))
-        (base / day).mkdir(parents=True, exist_ok=True)
-        shutil.copy(
-            glob.glob(str(scratch / "part-*.parquet"))[0],
-            str(base / day / "dwhassessment_1.parquet"),
-        )
-
-    out = _read_avro_tree_jvm(
-        spark, str(base), schema, _format="parquet", _glob="*.parquet"
+        (base / day).mkdir(parents=True)
+        write_ocf(str(base / day / "dwhassessment_1.avro"), avsc, [{"QueryId": qid}])
+    expected = sorted([
+        ("q1", dt.date(2024, 1, 2)),
+        ("q2", dt.date(2024, 2, 28)),
+        ("qbad", None),
+        ("qmisc", None),
+    ])
+    batch, stream = _batch_and_stream(
+        spark, str(base), str(tmp_path / "ckpt"), "QueryId", "EventDate"
     )
-    assert out.schema.fieldNames() == ["QueryText", "DurationMs", "EventDate"]
-    got = {r["QueryText"]: r["EventDate"] for r in out.collect()}
-    assert got == {
-        "q1": dt.date(2024, 1, 2),
-        "q2": dt.date(2024, 2, 28),
-        "qmisc": None,
-        "qbad": None,
-    }
+    assert [tuple(r) for r in batch] == expected
+    assert [tuple(r) for r in stream] == expected
+
+
+def test_avro_times_survive_a_non_utc_worker(spark, tmp_path, monkeypatch):
+    """timestamp-millis is a UTC instant whatever the Python worker's local zone.
+    Workers are keyed by their environment, so setting TZ starts new ones in
+    America/New_York (UTC-4 on 2024-03-10 07:30Z). The sink must store 07:30, and
+    batch and stream reads must return 07:30 both for a sink-written tree and for a
+    file written straight through the codec."""
+    from pyspark.sql import functions as F
+
+    from hadoop_migration_assessment_tools_spark.sources.sink import DatePartitionedSink
+
+    monkeypatch.setitem(spark.sparkContext.environment, "TZ", "America/New_York")
+    millis = 1710055800000  # 2024-03-10T07:30:00Z
+    instant = dt.datetime(2024, 3, 10, 7, 30)
+
+    sink_tree = str(tmp_path / "sink_tree")
+    row = {f.name: None for f in QUERY_EVENTS_SCHEMA.fields}
+    row.update(QueryId="q1", EventType="QUERY_SUBMITTED")
+    df = spark.createDataFrame([row], schema=QUERY_EVENTS_SCHEMA).withColumn(
+        "StartTime", F.timestamp_millis(F.lit(millis))
+    )
+    DatePartitionedSink(sink_tree, fmt="avro").write_batch(df)
+    (written,) = [
+        os.path.join(d, f) for d, _, fs in os.walk(sink_tree) for f in fs
+    ]
+    assert read_ocf(written)[1][0]["StartTime"] == instant
+
+    codec_tree = tmp_path / "codec_tree"
+    (codec_tree / "2024-03-10").mkdir(parents=True)
+    write_ocf(
+        str(codec_tree / "2024-03-10" / "dwhassessment_1.avro"),
+        struct_to_avsc(QUERY_EVENTS_SCHEMA),
+        [{"QueryId": "q1", "StartTime": instant}],
+    )
+    for tree in (sink_tree, str(codec_tree)):
+        batch, stream = _batch_and_stream(
+            spark, tree, str(tmp_path / ("ckpt_" + os.path.basename(tree))),
+            F.unix_millis("StartTime"),
+        )
+        assert [r[0] for r in batch] == [millis], tree
+        assert [r[0] for r in stream] == [millis], tree
+
+
+def test_arrow_batch_matches_from_pylist():
+    """The decoder's Arrow builder gives what pyarrow's own Python-object
+    conversion gives (the reference here), for every AVRO_TREE_SCHEMA column type:
+    missing and extra fields, NULLs, NULL and empty lists, a NULL list item,
+    non-ASCII text, sub-second and pre-epoch times."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from hadoop_migration_assessment_tools_spark.sources.readers import (
+        AVRO_TREE_SCHEMA,
+        arrow_batch,
+    )
+
+    schema = to_arrow_schema(AVRO_TREE_SCHEMA)
+    records = [
+        dict(_events()[0], TablesRead=["db@a", None, "db@é中"], EventDate=dt.date(2024, 1, 2)),
+        dict(_events()[1], TablesRead=None, Unknown="dropped"),
+        {"EndTime": dt.datetime(2024, 3, 10, 7, 30), "EventDate": None},
+    ]
+    got = arrow_batch(records, schema)
+    got.validate(full=True)
+    assert got.equals(pa.RecordBatch.from_pylist(records, schema=schema))
+    assert arrow_batch([], schema).num_rows == 0
+
+
+def test_arrow_batch_keeps_pandas_out_of_the_worker():
+    """Every Python worker that decodes or writes Avro builds Arrow batches; pyarrow's
+    own conversion would import pandas into each of them (~40 MB of RSS apiece)."""
+    import subprocess
+    import sys
+
+    code = (
+        "import sys, datetime as dt, pyarrow as pa\n"
+        "from pyspark.sql.pandas.types import to_arrow_schema\n"
+        "from hadoop_migration_assessment_tools_spark.sources.readers import AVRO_TREE_SCHEMA, arrow_batch\n"
+        "b = arrow_batch([{'QueryId': 'q', 'StartTime': dt.datetime(2024, 1, 1),"
+        " 'TablesRead': ['t'], 'EventDate': dt.date(2024, 1, 1)}], to_arrow_schema(AVRO_TREE_SCHEMA))\n"
+        "b.to_pylist()\n"
+        "assert 'pandas' not in sys.modules, 'pandas imported'\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run([sys.executable, "-c", code], check=True, cwd=root, timeout=120)

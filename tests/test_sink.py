@@ -96,6 +96,50 @@ def test_avro_batch_roundtrip_reference_layout(spark, tmp_path):
     assert got["q3"]["EventDate"].isoformat() == "2024-01-02"
 
 
+def test_avro_io_crosses_as_arrow(spark, tmp_path, monkeypatch):
+    """The Avro sink and the batch read move rows through ``mapInArrow``, never
+    through an RDD of pickled Rows: the write is one ``MapInArrow`` over the input,
+    and the read is one ``MapInArrow`` over a ``binaryFile`` scan, with no
+    ``Scan ExistingRDD``."""
+    from pyspark.sql import functions as F
+
+    base = str(tmp_path / "events")
+    # built from range, not a local list, so no scan of the input is an RDD scan
+    df = spark.range(3).select(
+        *[
+            F.lit(None).cast(f.dataType).alias(f.name)
+            for f in QUERY_EVENTS_SCHEMA.fields
+            if f.name not in ("QueryId", "StartTime")
+        ],
+        F.col("id").cast("string").alias("QueryId"),
+        F.timestamp_millis(F.lit(1704067200000) + F.col("id")).alias("StartTime"),
+    )
+    cls = type(df)
+    plans = []
+    collect = cls.collect
+
+    def recording_collect(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    monkeypatch.setattr(cls, "collect", recording_collect)
+    DatePartitionedSink(base, fmt="avro").write_batch(df)
+    monkeypatch.undo()
+    assert len(plans) == 1, plans
+    (write_plan,) = plans
+    assert write_plan.startswith("MapInArrow "), write_plan
+    assert "ExistingRDD" not in write_plan
+
+    read_plan = (
+        read_event_log(spark, base, fmt="avro")._jdf.queryExecution().executedPlan().toString()
+    )
+    assert read_plan.startswith("MapInArrow "), read_plan
+    assert read_plan.count("MapInArrow") == 1
+    assert "FileScan binaryFile" in read_plan
+    assert "ExistingRDD" not in read_plan
+    assert read_event_log(spark, base, fmt="avro").count() == 3
+
+
 def test_avro_rollover_records_split_files(spark, tmp_path):
     """SRC4 equivalent on the avro path: record cap closes the container and opens a
     new instant-named file, like the reference's time rotation."""

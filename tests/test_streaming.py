@@ -470,14 +470,15 @@ def test_stream_avro_tree_matches_batch_read(spark, tmp_path):
             spark.createDataFrame([event("q3", 3)], schema=QUERY_EVENTS_SCHEMA)
         )
         q.processAllAvailable()
-        assert {r["QueryId"] for r in spark.table("avro_tail").collect()} == {
-            "q1", "q2", "q3",
-        }
+        streamed = spark.table("avro_tail").collect()
     finally:
         q.stop()
 
-    batch = read_event_log(spark, base, fmt="avro")
-    assert batch.count() == 3
+    # row for row over all 33 record columns and EventDate
+    batch = read_event_log(spark, base, fmt="avro").collect()
+    assert len(batch) == 3 and len(batch[0]) == 34
+    key = lambda r: r["QueryId"]  # noqa: E731
+    assert sorted(streamed, key=key) == sorted(batch, key=key)
 
 
 # --- STR2 literal bounded-drop mode (shedding.py) ------------------------------------
