@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import datetime
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -19,6 +20,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from ..config import CORPUS_TABLES
 from ..schema import QUERY_EVENTS_SCHEMA
 from .avro_ocf import read_ocf_bytes
+from .sink import PARTITION_COL
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -55,20 +57,41 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
+#: What every event-log read returns, batch or stream, parquet or Avro: the record
+#: schema plus the day directory's date.
+EVENT_LOG_SCHEMA = T.StructType(
+    list(QUERY_EVENTS_SCHEMA.fields) + [T.StructField(PARTITION_COL, T.DateType(), True)]
+)
+
+#: The only day-directory name that carries a date: ``YYYY-MM-DD``, as the sink writes.
+_DAY_DIR = re.compile(r"[0-9]{4}-[0-9]{2}-[0-9]{2}")
+
+
+def check_log_format(fmt: str) -> None:
+    """Raise ValueError unless ``fmt`` is a log format the readers know."""
+    if fmt not in ("parquet", "avro"):
+        raise ValueError(f"unsupported event log format {fmt!r}")
+
+
 def read_event_log(spark: SparkSession, path: str, fmt: str = "parquet") -> DataFrame:
-    """Read a (possibly date-partitioned, multi-file) QueryEvents log tree as one dataset.
+    """Read a (possibly date-partitioned, multi-file) QueryEvents log tree as one
+    ``EVENT_LOG_SCHEMA`` dataset.
 
     SET1 multi-source union: a glob/dir read is the Spark-native union of all logger
     instances × days × rollover files (reference asserts the same invariant across its
     dir tree in testing/TestUtils.java:178-183).
 
-    fmt='avro' reads reference-layout trees (``<base>/<YYYY-MM-DD>/dwhassessment_*.avro``,
-    written by our sink or by the reference hook itself): the ``binaryFile`` source
-    lists the files and ``decode_avro_files`` decodes each one in a task, the same
-    decoder the streaming tail uses. The day-directory name comes back as an
-    ``EventDate`` column, matching the hive-style partition column of the parquet
-    layout.
+    Fields are picked by name under one declared schema, so a log tree written across
+    hook versions reads the same way in every format: a field a file lacks reads as
+    NULL and a field it adds is dropped. fmt='parquet' reads ``EventDate`` from the
+    hive-style partition directories (NULL in a flat tree); with the schema declared,
+    planning touches no file footer. fmt='avro' reads reference-layout trees
+    (``<base>/<YYYY-MM-DD>/dwhassessment_*.avro``, written by our sink or by the
+    reference hook itself): the ``binaryFile`` source lists the files and
+    ``decode_avro_files`` decodes each one in a task, the same decoder the streaming
+    tail uses.
     """
+    check_log_format(fmt)
     if fmt == "avro":
         return decode_avro_files(
             spark.read.format("binaryFile")
@@ -76,51 +99,47 @@ def read_event_log(spark: SparkSession, path: str, fmt: str = "parquet") -> Data
             .option("recursiveFileLookup", "true")
             .load(path)
         )
-    # mergeSchema is the SRC5 all-nullable contract made operational: a log tree
-    # written across hook versions (a late-added nullable field) must surface the
-    # SUPERSET schema with NULLs for old days — the default footer-sampling read
-    # would silently pick ONE file's schema and drop the new column. Cost: one
-    # footer read per file at planning time.
-    return spark.read.option("mergeSchema", "true").parquet(path)
+    return spark.read.schema(EVENT_LOG_SCHEMA).parquet(path)
 
 
-#: What an Avro log tree reads as: the record schema plus the day directory's date.
-AVRO_TREE_SCHEMA = T.StructType(
-    list(QUERY_EVENTS_SCHEMA.fields) + [T.StructField("EventDate", T.DateType(), True)]
-)
+def _day_of_dir(name: str) -> datetime.date | None:
+    """The date a ``YYYY-MM-DD`` day-directory name stands for; None for any other
+    name, including the ISO basic and week forms ``date.fromisoformat`` also takes."""
+    if not _DAY_DIR.fullmatch(name):
+        return None
+    try:
+        return datetime.date.fromisoformat(name)
+    except ValueError:  # the shape of a date but no date, e.g. 2024-99-99
+        return None
 
 
 def decode_avro_files(binary: DataFrame) -> DataFrame:
     """Decode a ``binaryFile`` relation of OCF files, batch or streaming, into
-    ``AVRO_TREE_SCHEMA`` rows.
+    ``EVENT_LOG_SCHEMA`` rows.
 
     Each file is decoded in a task by the built-in codec (sources/avro_ocf.py) and
     handed back as one Arrow batch (``mapInArrow``, which is streaming-legal), so
     memory is bounded by one rollover file. Record fields are picked by name: a
     field a file lacks reads as NULL and a field it adds is dropped. ``EventDate``
-    is the parent directory's name as an ISO date, NULL when the name is no date.
+    is the parent directory's date (``_day_of_dir``), NULL when the name is no date.
     Times cross as UTC epoch values, so the Python worker's local time zone plays
     no part.
     """
-    arrow_schema = to_arrow_schema(AVRO_TREE_SCHEMA)
+    arrow_schema = to_arrow_schema(EVENT_LOG_SCHEMA)
 
     def decode(batches):
         for batch in batches:
             paths, contents = batch.column("path"), batch.column("content")
             for i in range(batch.num_rows):
-                parent = os.path.basename(os.path.dirname(paths[i].as_py()))
-                try:
-                    day = datetime.date.fromisoformat(parent)
-                except ValueError:
-                    day = None
+                day = _day_of_dir(os.path.basename(os.path.dirname(paths[i].as_py())))
                 _, records = read_ocf_bytes(contents[i].as_py())
                 if not records:
                     continue
                 for rec in records:
-                    rec["EventDate"] = day
+                    rec[PARTITION_COL] = day
                 yield arrow_batch(records, arrow_schema)
 
-    return binary.select("path", "content").mapInArrow(decode, AVRO_TREE_SCHEMA)
+    return binary.select("path", "content").mapInArrow(decode, EVENT_LOG_SCHEMA)
 
 
 _EPOCH = datetime.datetime(1970, 1, 1)
@@ -130,7 +149,7 @@ _EPOCH_DATE = datetime.date(1970, 1, 1)
 
 def arrow_batch(records: list[dict], schema):
     """``pa.RecordBatch.from_pylist(records, schema=schema)`` for the column types of
-    ``AVRO_TREE_SCHEMA`` (string, list of string, microsecond timestamp from naive
+    ``EVENT_LOG_SCHEMA`` (string, list of string, microsecond timestamp from naive
     UTC ``datetime``, date) plus int64, built from buffers. pyarrow's conversion of
     Python objects imports pandas, which would add ~40 MB to every Python worker."""
     import array

@@ -44,6 +44,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..config import DEFAULT_ROLLOVER_INTERVAL_SECONDS, DWH_ASSESSMENT_FILE_PREFIX
 from ..functions.localrel import local_df
 
+#: The day column every log tree is partitioned by; the readers return it as a date.
 PARTITION_COL = "EventDate"
 
 #: Block codec of every OCF file the sink and avro compaction write.
@@ -74,22 +75,20 @@ def make_shared_day_dir(day_dir: str) -> None:
 
 def with_event_date(df: DataFrame, ts_cols: tuple[str, str] = ("StartTime", "EndTime")) -> DataFrame:
     """Derive the UTC day partition column from the first non-null event timestamp.
+    Rows that already carry a day keep it; a NULL day (a log read back from a flat,
+    unpartitioned tree) is derived.
 
     The reference partitions by *processing-time* wall clock (writer-side date); we partition
     by the record's own timestamp, which is deterministic and replayable (documented upgrade —
     SURVEY §2.8 STR7 note). Session timezone is UTC, so to_date == UTC day.
     """
-    return df.withColumn(
-        PARTITION_COL, F.to_date(F.coalesce(*[F.col(c) for c in ts_cols]))
-    )
+    day = F.to_date(F.coalesce(*[F.col(c) for c in ts_cols]))
+    if PARTITION_COL in df.columns:
+        day = F.coalesce(PARTITION_COL, day)
+    return df.withColumn(PARTITION_COL, day)
 
 
-def _avro_partition_writer(
-    base_dir: str,
-    avsc: dict,
-    partition_col: str,
-    rollover_records: int | None,
-):
+def _avro_partition_writer(base_dir: str, avsc: dict, rollover_records: int | None):
     """Executor-side ``mapInArrow`` function: writes one partition's rows into per-day
     OCF files with reference-faithful names and yields the number written. One
     loggerId per task (= one logger instance). Top-level times arrive as epoch
@@ -115,7 +114,7 @@ def _avro_partition_writer(
         for batch in batches:
             # the record encoder picks fields by name, so the day column is not stored
             for rec in batch.to_pylist():
-                d = rec[partition_col]
+                d = rec[PARTITION_COL]
                 day = d.isoformat() if d is not None else "__unknown_date__"
                 writer, count = open_writers.get(day, (None, 0))
                 if writer is None or (rollover_records and count >= rollover_records):
@@ -144,14 +143,12 @@ class DatePartitionedSink:
         base_dir: str,
         fmt: str = "parquet",
         rollover_records: int | None = 1_000_000,
-        partition_col: str = PARTITION_COL,
     ) -> None:
         if fmt not in ("parquet", "avro"):
             raise ValueError(f"unsupported sink format {fmt!r}")
         self.base_dir = base_dir
         self.fmt = fmt
         self.rollover_records = rollover_records
-        self.partition_col = partition_col
 
     def write_batch(self, df: DataFrame, mode: str = "append", time_sorted: bool = True) -> None:
         """Batch write, partitioned by UTC event date (SRC3).
@@ -161,18 +158,17 @@ class DatePartitionedSink:
         (DatePartitionedRecordsWriterFactory.java:208-214). Cheap (intra-partition
         sort, no shuffle) and makes time-range scans of a file monotone.
         """
-        if self.partition_col not in df.columns:
-            df = with_event_date(df)
+        df = with_event_date(df)
         if time_sorted:
             df = df.sortWithinPartitions(
                 F.coalesce(F.col("StartTime"), F.col("EndTime"))
                 if "StartTime" in df.columns
-                else F.col(self.partition_col)
+                else F.col(PARTITION_COL)
             )
         if self.fmt == "avro":
             self._write_batch_avro(df)
             return
-        writer = df.write.mode(mode).partitionBy(self.partition_col)
+        writer = df.write.mode(mode).partitionBy(PARTITION_COL)
         if self.rollover_records:
             # File-size rollover equivalent (SRC4): caps records per physical file the way
             # the reference's time-based rotation caps records per Avro container.
@@ -188,19 +184,16 @@ class DatePartitionedSink:
         conversion happens in the Python worker."""
         from .avro_ocf import struct_to_avsc
 
-        record_schema = df.drop(self.partition_col).schema
+        record_schema = df.drop(PARTITION_COL).schema
         cols = [
             F.unix_millis(f.name).alias(f.name)
             if isinstance(f.dataType, T.TimestampType)
             else F.col(f.name)
             for f in record_schema.fields
         ]
-        written = df.select(*cols, self.partition_col).mapInArrow(
+        written = df.select(*cols, PARTITION_COL).mapInArrow(
             _avro_partition_writer(
-                self.base_dir,
-                struct_to_avsc(record_schema),
-                self.partition_col,
-                self.rollover_records,
+                self.base_dir, struct_to_avsc(record_schema), self.rollover_records
             ),
             "written long",
         )
@@ -219,8 +212,7 @@ class DatePartitionedSink:
         time-rolled layout of the reference, with exactly-once commit instead of
         flush-per-record (STR3 upgrade). The avro path runs through foreachBatch
         (idempotent per-batch OCF write; each micro-batch = one rollover window)."""
-        if self.partition_col not in df.columns:
-            df = with_event_date(df)
+        df = with_event_date(df)
         if self.fmt == "avro":
             return (
                 df.writeStream.foreachBatch(
@@ -235,7 +227,7 @@ class DatePartitionedSink:
             df.writeStream.format(self.fmt)
             .option("checkpointLocation", checkpoint_dir)
             .option("path", self.base_dir)
-            .partitionBy(self.partition_col)
+            .partitionBy(PARTITION_COL)
             .trigger(processingTime=f"{trigger_seconds} seconds")
             .outputMode(output_mode)
             .start()

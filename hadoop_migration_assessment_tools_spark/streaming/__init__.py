@@ -1,6 +1,5 @@
 from .source import (  # noqa: F401
     read_event_stream,
-    read_event_stream_avro,
     read_events_table_stream,
 )
 from .windows import (  # noqa: F401
@@ -12,12 +11,7 @@ from .windows import (  # noqa: F401
     sliding_window_value,
     tumbling_window_counts,
 )
-from .pairing import (  # noqa: F401
-    PAIRED_SCHEMA,
-    pair_submit_complete_stream,
-    pair_with_timeout,
-    stream_dedup_events,
-)
+from .pairing import pair_submit_complete_stream  # noqa: F401
 from .foreach import IdempotentBatchSink  # noqa: F401
 from .shedding import DEFAULT_QUEUE_CAPACITY, shed_overflow  # noqa: F401
 from .generator import live_event_stream, synthetic_hook_stream  # noqa: F401

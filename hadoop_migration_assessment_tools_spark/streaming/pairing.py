@@ -1,67 +1,64 @@
 """STR8: stateful submit↔complete pairing in-stream (SURVEY §2.8).
 
 The reference pairs pre/post in-process on one HookContext (EventLogger.java:135-137);
-once events are *streamed* rows, pairing becomes cross-row state. Two implementations:
+once events are *streamed* rows, pairing becomes cross-row state.
+``pair_submit_complete_stream`` is a declarative stream-stream join with watermarks and
+a time-range condition, hash-partitioned by QueryId on both sides, with state bounded
+by the watermark: the 100 TB shape. It follows the batch pairing's rules
+(``operators.correlate.correlate_submit_complete``): events with a NULL QueryId are
+dropped, ``how`` is one of ``left|inner|right|full``, and the output QueryId is the
+submission's or, for a completion-only id, the completion's. On a log whose queries
+complete within ``JOIN_WINDOW`` of submission, whose duplicate deliveries are
+identical and whose events arrive within the watermark, stream and batch give the
+same rows. Two rules still differ:
 
-- ``pair_submit_complete_stream`` — declarative stream-stream left-outer join with
-  watermarks + a time-range condition. Spark emits unmatched submissions (NULL
-  completion) once the watermark passes the join window. State is bounded by the
-  watermark; this is the 100 TB shape (hash-partitioned by QueryId on both sides).
-- ``pair_with_timeout`` — applyInPandasWithState with event-time timeout, for custom
-  timeout semantics: an unmatched submission is emitted as an explicit TIMEOUT row the
-  moment the watermark passes StartTime + timeout (vs at watermark-past-join-window in
-  the join form), and duplicate completions are resolved first-wins in state.
+- stream pairs only a completion that lands within ``JOIN_WINDOW`` of its submission;
+  batch pairs whatever the gap;
+- with ``dedup=True`` stream keeps the first delivery of a duplicated event
+  (``dropDuplicatesWithinWatermark``); batch keeps the one with the earliest timestamp.
 
-DDP1 streaming: ``stream_dedup_events`` — dropDuplicatesWithinWatermark on
-(QueryId, EventType), state bounded by the watermark delay.
-
-Operational note (join form): the global watermark is the MIN across the submit-side
-and completion-side watermarks (spark.sql.streaming.multipleWatermarkPolicy=min). A
-quiet completion stream therefore holds back orphan emission; in a live deployment
-either both event types flow continuously (the normal case) or set the policy to
-'max' accepting late-completion drops.
+Outer rows (an unmatched submission or completion) emit once the watermark passes the
+join window. The global watermark is the MIN across the submit-side and
+completion-side watermarks (spark.sql.streaming.multipleWatermarkPolicy=min), so a
+quiet completion stream holds back orphan emission; in a live deployment either both
+event types flow continuously (the normal case) or set the policy to 'max' accepting
+late-completion drops.
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import DataFrame, functions as F, types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import DataFrame, functions as F
 
 from ..config import EVENT_QUERY_COMPLETED, EVENT_QUERY_SUBMITTED
+from ..operators.correlate import _KEEP
 
-
-def stream_dedup_events(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """DDP1 on a stream: at-least-once delivery collapses to exactly-one row per
-    (QueryId, EventType) within the watermark horizon."""
-    ts = F.coalesce(F.col("StartTime"), F.col("EndTime"))
-    return (
-        events.withColumn("_event_ts", ts)
-        .withWatermark("_event_ts", watermark)
-        .dropDuplicatesWithinWatermark(["QueryId", "EventType"])
-        .drop("_event_ts")
-    )
+#: How long after its submission a completion may land and still pair.
+JOIN_WINDOW = "2 hours"
 
 
 def pair_submit_complete_stream(
     events: DataFrame,
     watermark: str = "1 hour",
-    join_window: str = "2 hours",
-    how: str = "leftOuter",
+    how: str = "left",
     dedup: bool = False,
 ) -> DataFrame:
-    """JN1 as a watermarked stream-stream join (leftOuter by default).
+    """JN1 as a watermarked stream-stream join.
 
-    Completion must land within [StartTime, StartTime + join_window]; a submission
-    with no completion in that window emits with NULL EndTime/Status after the
-    watermark passes. how='inner' emits matched pairs immediately per micro-batch
-    (no watermark wait) — the right mode for batch-parity checks.
+    Completion must land within [StartTime, StartTime + JOIN_WINDOW]. ``how`` takes
+    the batch pairing's values, which Spark's join accepts as they are: ``left`` (the
+    default) also emits a submission with no completion, with NULL EndTime/Status,
+    after the watermark passes; ``right`` does the same for a completion with no
+    submission, ``full`` both; ``inner`` emits matched pairs as their micro-batch
+    runs. Anything else raises ValueError.
 
     dedup=True applies DDP1 *per side, inside this operator* — a
     dropDuplicatesWithinWatermark on the side's key after its own watermark. It
     cannot be a separate upstream operator: each branch may define its watermark
     only once, and the join needs it on StartTime/EndTime specifically.
     """
+    if how not in _KEEP:
+        raise ValueError(f"how must be one of {sorted(_KEEP)}, got {how!r}")
+    events = events.filter(F.col("QueryId").isNotNull())
     sub = (
         events.filter(F.col("EventType") == EVENT_QUERY_SUBMITTED)
         .select(
@@ -90,12 +87,12 @@ def pair_submit_complete_stream(
     cond = (
         (F.col("sub_QueryId") == F.col("comp_QueryId"))
         & (F.col("EndTime") >= F.col("StartTime"))
-        & (F.col("EndTime") <= F.col("StartTime") + F.expr(f"INTERVAL {join_window}"))
+        & (F.col("EndTime") <= F.col("StartTime") + F.expr(f"INTERVAL {JOIN_WINDOW}"))
     )
     return (
         sub.join(comp, cond, how)
         .select(
-            F.col("sub_QueryId").alias("QueryId"),
+            F.coalesce("sub_QueryId", "comp_QueryId").alias("QueryId"),
             "QueryText",
             "RequestUser",
             "ExecutionMode",
@@ -109,85 +106,3 @@ def pair_submit_complete_stream(
             ),
         )
     )
-
-
-PAIRED_SCHEMA = T.StructType(
-    [
-        T.StructField("QueryId", T.StringType()),
-        T.StructField("StartTime", T.TimestampType()),
-        T.StructField("EndTime", T.TimestampType()),
-        T.StructField("Status", T.StringType()),
-        T.StructField("DurationMillis", T.LongType()),
-    ]
-)
-
-_STATE_SCHEMA = "start_millis long, end_millis long, status string"
-
-
-def pair_with_timeout(events: DataFrame, timeout_ms: int = 3_600_000) -> DataFrame:
-    """applyInPandasWithState pairing with explicit event-time timeout -> TIMEOUT rows.
-
-    State per QueryId is one tiny tuple; the group-by hash-partitions by QueryId so
-    state shards evenly at any scale. Timeout fires when the watermark passes
-    StartTime + timeout_ms.
-    """
-
-    def fn(key, pdfs, state):
-        # bind timeout_ms without global state
-        return _pair_fn_with_timeout(key, pdfs, state, timeout_ms)
-
-    ts = F.coalesce(F.col("StartTime"), F.col("EndTime"))
-    prepared = (
-        events.withColumn("_event_ts", ts)
-        .withWatermark("_event_ts", "10 minutes")
-        .select("QueryId", "EventType", "StartTime", "EndTime", "Status", "_event_ts")
-    )
-    return prepared.groupBy("QueryId").applyInPandasWithState(
-        fn,
-        outputStructType=PAIRED_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-def _pair_fn_with_timeout(key, pdfs, state: GroupState, timeout_ms: int):
-    (query_id,) = key
-
-    def emit(start_ms, end_ms, status):
-        return pd.DataFrame(
-            {
-                "QueryId": [query_id],
-                "StartTime": [pd.Timestamp(start_ms, unit="ms") if start_ms is not None else pd.NaT],
-                "EndTime": [pd.Timestamp(end_ms, unit="ms") if end_ms is not None else pd.NaT],
-                "Status": [status],
-                "DurationMillis": [
-                    (end_ms - start_ms) if (start_ms is not None and end_ms is not None) else None
-                ],
-            }
-        )
-
-    if state.hasTimedOut:
-        start_ms, end_ms, status = state.get
-        state.remove()
-        yield emit(start_ms, None, "TIMEOUT")
-        return
-
-    start_ms, end_ms, status = state.get if state.exists else (None, None, None)
-    for pdf in pdfs:
-        for _, row in pdf.iterrows():
-            if row["EventType"] == EVENT_QUERY_SUBMITTED and not pd.isna(row["StartTime"]):
-                ms = int(pd.Timestamp(row["StartTime"]).value // 1_000_000)
-                start_ms = ms if start_ms is None else min(start_ms, ms)
-            elif row["EventType"] == EVENT_QUERY_COMPLETED and end_ms is None:
-                if not pd.isna(row["EndTime"]):
-                    end_ms = int(pd.Timestamp(row["EndTime"]).value // 1_000_000)
-                    status = row["Status"]
-
-    if start_ms is not None and end_ms is not None:
-        state.remove()
-        yield emit(start_ms, end_ms, status)
-    else:
-        state.update((start_ms, end_ms, status))
-        if start_ms is not None:
-            state.setTimeoutTimestamp(start_ms + timeout_ms)

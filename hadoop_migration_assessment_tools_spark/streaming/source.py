@@ -15,8 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..schema import QUERY_EVENTS_SCHEMA
-from ..sources.readers import decode_avro_files
+from ..sources.readers import EVENT_LOG_SCHEMA, check_log_format, decode_avro_files
 
 
 def read_event_stream(
@@ -25,35 +24,27 @@ def read_event_stream(
     fmt: str = "parquet",
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """Stream QueryEvents rows from a (growing) log directory."""
-    reader = spark.readStream.schema(QUERY_EVENTS_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.format(fmt).load(path)
+    """Stream ``EVENT_LOG_SCHEMA`` rows from a (growing) log tree: the streaming form
+    of ``sources.readers.read_event_log``, with its schema and its formats, so a
+    stream and a batch read of the same tree give the same rows.
 
-
-def read_event_stream_avro(
-    spark: SparkSession,
-    path: str,
-    max_files_per_trigger: int | None = None,
-) -> DataFrame:
-    """Tail a reference-layout Avro tree (``<base>/<YYYY-MM-DD>/dwhassessment_*.avro``)
-    as a stream — the consumption mode the reference's own downstream pipeline uses
-    (new files appear per rollover window; SRC4). The ``binaryFile`` streaming source
-    tracks new files, and the batch reader's decoder
-    (``sources.readers.decode_avro_files``) turns them into rows, so a stream and a
-    batch read of the same tree give the same rows: QUERY_EVENTS_SCHEMA columns plus
-    ``EventDate`` from the day directory."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require an explicit schema; binaryFile's is fixed
-        .schema("path string, modificationTime timestamp, length long, content binary")
-        .option("pathGlobFilter", "*.avro")
-        .option("recursiveFileLookup", "true")
-    )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return decode_avro_files(reader.load(path))
+    fmt='avro' tails a reference-layout tree (``<base>/<YYYY-MM-DD>/dwhassessment_*.avro``)
+    the way the reference's own downstream pipeline consumes it (new files appear per
+    rollover window; SRC4): the ``binaryFile`` streaming source tracks new files and
+    the batch reader's decoder (``decode_avro_files``) turns them into rows."""
+    check_log_format(fmt)
+    per_trigger = {} if max_files_per_trigger is None else {"maxFilesPerTrigger": max_files_per_trigger}
+    if fmt == "avro":
+        return decode_avro_files(
+            spark.readStream.format("binaryFile")
+            # streaming sources require an explicit schema; binaryFile's is fixed
+            .schema("path string, modificationTime timestamp, length long, content binary")
+            .option("pathGlobFilter", "*.avro")
+            .option("recursiveFileLookup", "true")
+            .options(**per_trigger)
+            .load(path)
+        )
+    return spark.readStream.schema(EVENT_LOG_SCHEMA).options(**per_trigger).parquet(path)
 
 
 def read_events_table_stream(

@@ -402,14 +402,12 @@ def test_avro_tree_read_skips_non_avro_files(spark, tmp_path):
 def _batch_and_stream(spark, base, ckpt, *cols):
     """``cols`` of the batch read and of a stream tailing the same tree, both sorted."""
     from hadoop_migration_assessment_tools_spark.sources.readers import read_event_log
-    from hadoop_migration_assessment_tools_spark.streaming.source import (
-        read_event_stream_avro,
-    )
+    from hadoop_migration_assessment_tools_spark.streaming.source import read_event_stream
 
     batch = read_event_log(spark, base, fmt="avro").select(*cols).collect()
     name = "avro_tail_" + os.path.basename(ckpt)
     q = (
-        read_event_stream_avro(spark, base).select(*cols)
+        read_event_stream(spark, base, fmt="avro").select(*cols)
         .writeStream.format("memory").queryName(name)
         .option("checkpointLocation", ckpt)
         .trigger(availableNow=True).start()
@@ -424,9 +422,10 @@ def _batch_and_stream(spark, base, ckpt, *cols):
 
 
 def test_avro_tree_event_date_from_day_dir(spark, tmp_path):
-    """EventDate is the day directory's name read as an ISO date, in batch and in
-    stream. "2024-99-99" has a date's shape but is no date; it and a foreign dir
-    degrade to EventDate=NULL and their rows still load."""
+    """EventDate is the day directory's ``YYYY-MM-DD`` name read as a date, in batch
+    and in stream. "2024-99-99" has a date's shape but is no date; it, a foreign dir
+    and the ISO basic ("20240102") and week ("2024-W01-2") forms, which are not the
+    sink's day-dir names, degrade to EventDate=NULL and their rows still load."""
     avsc = struct_to_avsc(QUERY_EVENTS_SCHEMA)
     base = tmp_path / "tree"
     for day, qid in [
@@ -434,6 +433,8 @@ def test_avro_tree_event_date_from_day_dir(spark, tmp_path):
         ("2024-02-28", "q2"),
         ("not-a-date", "qmisc"),
         ("2024-99-99", "qbad"),
+        ("20240102", "qbasic"),
+        ("2024-W01-2", "qweek"),
     ]:
         (base / day).mkdir(parents=True)
         write_ocf(str(base / day / "dwhassessment_1.avro"), avsc, [{"QueryId": qid}])
@@ -441,7 +442,9 @@ def test_avro_tree_event_date_from_day_dir(spark, tmp_path):
         ("q1", dt.date(2024, 1, 2)),
         ("q2", dt.date(2024, 2, 28)),
         ("qbad", None),
+        ("qbasic", None),
         ("qmisc", None),
+        ("qweek", None),
     ])
     batch, stream = _batch_and_stream(
         spark, str(base), str(tmp_path / "ckpt"), "QueryId", "EventDate"
@@ -494,18 +497,18 @@ def test_avro_times_survive_a_non_utc_worker(spark, tmp_path, monkeypatch):
 
 def test_arrow_batch_matches_from_pylist():
     """The decoder's Arrow builder gives what pyarrow's own Python-object
-    conversion gives (the reference here), for every AVRO_TREE_SCHEMA column type:
+    conversion gives (the reference here), for every EVENT_LOG_SCHEMA column type:
     missing and extra fields, NULLs, NULL and empty lists, a NULL list item,
     non-ASCII text, sub-second and pre-epoch times."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     from hadoop_migration_assessment_tools_spark.sources.readers import (
-        AVRO_TREE_SCHEMA,
+        EVENT_LOG_SCHEMA,
         arrow_batch,
     )
 
-    schema = to_arrow_schema(AVRO_TREE_SCHEMA)
+    schema = to_arrow_schema(EVENT_LOG_SCHEMA)
     records = [
         dict(_events()[0], TablesRead=["db@a", None, "db@é中"], EventDate=dt.date(2024, 1, 2)),
         dict(_events()[1], TablesRead=None, Unknown="dropped"),
@@ -526,9 +529,9 @@ def test_arrow_batch_keeps_pandas_out_of_the_worker():
     code = (
         "import sys, datetime as dt, pyarrow as pa\n"
         "from pyspark.sql.pandas.types import to_arrow_schema\n"
-        "from hadoop_migration_assessment_tools_spark.sources.readers import AVRO_TREE_SCHEMA, arrow_batch\n"
+        "from hadoop_migration_assessment_tools_spark.sources.readers import EVENT_LOG_SCHEMA, arrow_batch\n"
         "b = arrow_batch([{'QueryId': 'q', 'StartTime': dt.datetime(2024, 1, 1),"
-        " 'TablesRead': ['t'], 'EventDate': dt.date(2024, 1, 1)}], to_arrow_schema(AVRO_TREE_SCHEMA))\n"
+        " 'TablesRead': ['t'], 'EventDate': dt.date(2024, 1, 1)}], to_arrow_schema(EVENT_LOG_SCHEMA))\n"
         "b.to_pylist()\n"
         "assert 'pandas' not in sys.modules, 'pandas imported'\n"
     )

@@ -1,12 +1,13 @@
 """STR1/STR7/STR8/DDP1 streaming tests: file sources into memory sinks with
 availableNow triggers (deterministic micro-batching), batch-parity cross-checks
-(SURVEY §7 Stage 4), stateful pairing with event-time timeout."""
+(SURVEY §7 Stage 4), stream-stream submit/complete pairing."""
 
 from __future__ import annotations
 
 import datetime as dt
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from hadoop_migration_assessment_tools_spark.schema import QUERY_EVENTS_SCHEMA
@@ -14,8 +15,6 @@ from hadoop_migration_assessment_tools_spark.sources.readers import load_table
 from hadoop_migration_assessment_tools_spark.sources.sink import DatePartitionedSink
 from hadoop_migration_assessment_tools_spark.streaming.pairing import (
     pair_submit_complete_stream,
-    pair_with_timeout,
-    stream_dedup_events,
 )
 from hadoop_migration_assessment_tools_spark.streaming.source import (
     read_event_stream,
@@ -176,7 +175,7 @@ def test_stream_stream_pairing_join(spark, tmp_path):
     _write_flat_file(spark, batch3, src, "b3.parquet")
 
     stream = read_event_stream(spark, src, max_files_per_trigger=1)
-    paired = pair_submit_complete_stream(stream, watermark="1 hour", join_window="2 hours")
+    paired = pair_submit_complete_stream(stream, watermark="1 hour")
     _run_available_now(paired, "paired_join")
     got = {r["QueryId"]: r for r in spark.table("paired_join").collect()}
     assert got["q1"]["Status"] == "SUCCESS"
@@ -185,70 +184,84 @@ def test_stream_stream_pairing_join(spark, tmp_path):
     assert got["q2"]["EndTime"] is None and got["q2"]["Status"] is None
 
 
-def test_pair_with_timeout_emits_timeout_rows(spark, tmp_path):
-    """STR8 stateful form: completion pairs in-state; unmatched submit becomes an
-    explicit TIMEOUT row when the watermark passes StartTime + timeout."""
-    src = str(tmp_path / "qe_state_src")
+_PAIR_COLS = [
+    "QueryId", "QueryText", "RequestUser", "ExecutionMode", "Queue",
+    "StartTime", "EndTime", "Status", "ErrorMessage", "DurationMillis",
+]
+
+
+def _pairing_log(spark, src) -> None:
+    """Four micro-batch files of a log that exercises every pairing rule: duplicate
+    deliveries (same timestamp), an orphan submission, a completion-only id, a
+    NULL-QueryId submit and complete, and a completion that lands in a later
+    micro-batch than its submission. The last two files are complete far-future
+    pairs: the watermark they carry is what evicts and emits the outer rows."""
     t0 = _ts("2024-01-01 00:00:00")
-    batch1 = [
-        _qe_row(QueryId="q1", EventType="QUERY_SUBMITTED", StartTime=t0),
-        _qe_row(
-            QueryId="q1",
-            EventType="QUERY_COMPLETED",
-            EndTime=t0 + dt.timedelta(minutes=10),
-            Status="SUCCESS",
-        ),
-        # duplicate completion: first-wins
-        _qe_row(
-            QueryId="q1",
-            EventType="QUERY_COMPLETED",
-            EndTime=t0 + dt.timedelta(minutes=50),
-            Status="FAIL",
-        ),
-        _qe_row(QueryId="q2", EventType="QUERY_SUBMITTED", StartTime=t0),  # will time out
-    ]
-    batch2 = [
-        _qe_row(
-            QueryId="q99",
-            EventType="QUERY_SUBMITTED",
-            StartTime=t0 + dt.timedelta(hours=6),
-        )
-    ]
-    _write_flat_file(spark, batch1, src, "f1.parquet")
-    time.sleep(1.1)  # file-source ordering is by modification time
-    _write_flat_file(spark, batch2, src, "f2.parquet")
 
-    stream = read_event_stream(spark, str(src), max_files_per_trigger=1)
-    paired = pair_with_timeout(stream, timeout_ms=3_600_000)  # 1 h
-    _run_available_now(paired, "paired_state")
-    got = {}
-    for r in spark.table("paired_state").collect():
-        got.setdefault(r["QueryId"], []).append(r)
-    assert got["q1"][0]["Status"] == "SUCCESS"  # first completion won
-    assert got["q1"][0]["DurationMillis"] == 10 * 60 * 1000
-    assert got["q2"][0]["Status"] == "TIMEOUT"
-    assert got["q2"][0]["EndTime"] is None
+    def sub(qid, minutes, **kw):
+        return _qe_row(QueryId=qid, EventType="QUERY_SUBMITTED",
+                       StartTime=t0 + dt.timedelta(minutes=minutes),
+                       QueryText=f"select {qid}", RequestUser="u1",
+                       ExecutionMode="TEZ", Queue="default", **kw)
+
+    def comp(qid, minutes, status="SUCCESS"):
+        return _qe_row(QueryId=qid, EventType="QUERY_COMPLETED",
+                       EndTime=t0 + dt.timedelta(minutes=minutes), Status=status)
+
+    files = [
+        [sub("q1", 0), sub("q1", 0), comp("q1", 10), comp("q1", 10),
+         sub("q2", 5),                       # never completes
+         comp("q3", 20, "FAIL"),             # completes, never submitted
+         sub(None, 1), comp(None, 2),        # no pairing key
+         sub("q4", 30)],                     # completes in the next file
+        [comp("q4", 50), sub("q5", 40), comp("q5", 45)],
+        [sub("q98", 12 * 60), comp("q98", 12 * 60 + 1)],
+        [sub("q99", 13 * 60), comp("q99", 13 * 60 + 1)],
+    ]
+    for i, rows in enumerate(files):
+        if i:
+            time.sleep(1.1)  # file-source ordering is by modification time
+        _write_flat_file(spark, rows, src, f"b{i}.parquet")
 
 
-def test_stream_dedup_within_watermark(spark, tmp_path):
-    src = str(tmp_path / "qe_dedup_src")
-    t0 = _ts("2024-01-01 00:00:00")
-    rows = [
-        _qe_row(QueryId="q1", EventType="QUERY_SUBMITTED", StartTime=t0),
-        _qe_row(QueryId="q1", EventType="QUERY_SUBMITTED", StartTime=t0),  # dup
-        _qe_row(QueryId="q1", EventType="QUERY_SUBMITTED", StartTime=t0),  # dup
-        _qe_row(
-            QueryId="q1",
-            EventType="QUERY_COMPLETED",
-            EndTime=t0 + dt.timedelta(minutes=1),
-            Status="SUCCESS",
-        ),
-    ]
-    spark.createDataFrame(rows, schema=QUERY_EVENTS_SCHEMA).write.parquet(src)
-    deduped = stream_dedup_events(read_event_stream(spark, src), watermark="1 hour")
-    _run_available_now(deduped, "deduped_stream")
-    out = spark.table("deduped_stream").collect()
-    assert len(out) == 2  # one submit + one complete
+@pytest.mark.parametrize("how", ["left", "inner", "right", "full"])
+def test_stream_pairing_matches_batch(spark, tmp_path, how):
+    """Stream and batch pair one log by one contract: for every ``how`` the
+    watermarked stream-stream join with in-join dedup gives row for row what
+    correlate_submit_complete(deduplicate_events(log), how) gives. NULL-QueryId
+    events pair under neither; completion-only ids keep their QueryId."""
+    from hadoop_migration_assessment_tools_spark.operators.correlate import (
+        correlate_submit_complete,
+        deduplicate_events,
+    )
+    from hadoop_migration_assessment_tools_spark.sources.readers import read_event_log
+
+    src = str(tmp_path / "src")
+    _pairing_log(spark, src)
+    stream = read_event_stream(spark, src, max_files_per_trigger=1)
+    paired = pair_submit_complete_stream(stream, watermark="1 hour", how=how, dedup=True)
+    name = f"pair_parity_{how}"
+    _run_available_now(paired, name)
+    streamed = spark.table(name).select(*_PAIR_COLS).collect()
+    spark.catalog.dropTempView(name)
+
+    batch = correlate_submit_complete(
+        deduplicate_events(read_event_log(spark, src)), how
+    ).select(*_PAIR_COLS).collect()
+    key = lambda r: r["QueryId"]  # noqa: E731
+    assert sorted(streamed, key=key) == sorted(batch, key=key)
+    expected = {"left": {"q1", "q2", "q4", "q5", "q98", "q99"},
+                "inner": {"q1", "q4", "q5", "q98", "q99"},
+                "right": {"q1", "q3", "q4", "q5", "q98", "q99"},
+                "full": {"q1", "q2", "q3", "q4", "q5", "q98", "q99"}}[how]
+    assert [r["QueryId"] for r in sorted(streamed, key=key)] == sorted(expected)
+
+
+def test_stream_pairing_rejects_unknown_how(spark, tmp_path):
+    src = str(tmp_path / "src")
+    _write_flat_file(spark, [_qe_row(QueryId="q1", EventType="QUERY_SUBMITTED")], src, "a.parquet")
+    with pytest.raises(ValueError, match="how must be one of"):
+        pair_submit_complete_stream(read_event_stream(spark, src), how="leftOuter")
 
 
 def test_streaming_sink_roundtrip(spark, tmp_path):
@@ -273,15 +286,12 @@ def test_streaming_sink_roundtrip(spark, tmp_path):
             read_event_stream(spark, src), checkpoint_dir=ckpt, trigger_seconds=1
         )
     )
-    deadline = time.time() + 60
-    import os
-
-    while time.time() < deadline:
-        dirs = set(os.listdir(out)) if os.path.exists(out) else set()
-        if {"EventDate=2024-01-01", "EventDate=2024-01-02"} <= dirs:
-            break
-        time.sleep(0.5)
-    q.stop()
+    # wait for the micro-batch's commit: the day dirs appear when its tasks write
+    # their files, before the file sink's metadata log records them
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
     back = spark.read.parquet(out)
     assert back.count() == 2
     assert {r["EventDate"].isoformat() for r in back.collect()} == {
@@ -435,9 +445,7 @@ def test_stream_avro_tree_matches_batch_read(spark, tmp_path):
     from hadoop_migration_assessment_tools_spark.schema import QUERY_EVENTS_SCHEMA
     from hadoop_migration_assessment_tools_spark.sources.readers import read_event_log
     from hadoop_migration_assessment_tools_spark.sources.sink import DatePartitionedSink
-    from hadoop_migration_assessment_tools_spark.streaming.source import (
-        read_event_stream_avro,
-    )
+    from hadoop_migration_assessment_tools_spark.streaming.source import read_event_stream
 
     base = str(tmp_path / "avro_tree")
 
@@ -451,7 +459,7 @@ def test_stream_avro_tree_matches_batch_read(spark, tmp_path):
     sink.write_batch(spark.createDataFrame([event("q1", 1), event("q2", 2)],
                                            schema=QUERY_EVENTS_SCHEMA))
 
-    stream = read_event_stream_avro(spark, base, max_files_per_trigger=10)
+    stream = read_event_stream(spark, base, fmt="avro", max_files_per_trigger=10)
     assert stream.isStreaming
     q = (
         stream.writeStream.format("memory").queryName("avro_tail")
