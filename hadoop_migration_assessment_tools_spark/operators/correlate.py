@@ -153,27 +153,24 @@ def query_log_rollups(correlated: DataFrame, *group_cols: str) -> DataFrame:
 
 
 def table_access_frequency(events: DataFrame) -> DataFrame:
-    """AGG6: explode TablesRead/TablesWritten into per-table read/write counts with a
-    hot-table rank. The explode fans out rows but each carries only (table, flag) —
-    the shuffle payload stays tiny at 100 TB of logs.
+    """AGG6: per-table read/write counts of the submissions' TablesRead and
+    TablesWritten, with a hot-table rank. One generator, ``stack`` then
+    ``explode``, turns each submission into (table, is_write) rows, so the input
+    is scanned and deduplicated once; a NULL array yields no rows. Every
+    submission counts, NULL-QueryId ones included. The explode fans out rows but
+    each carries only (table, flag): the shuffle payload stays tiny at 100 TB of
+    logs.
 
-    hot_rank is a two-phase distributed rank (plans/ranking.py), not a global
-    no-partitionBy Window: a large estate can have millions of distinct tables, and
-    the single-task global window would be the scale bottleneck of this query.
-
-    Not lazy: the rank's local checkpoint runs the read, the dedup and this
-    aggregate's shuffle stages as Spark jobs when this function is called, before
-    any action on its result (plans/ranking.py)."""
-    sub = events.filter(F.col("EventType") == EVENT_QUERY_SUBMITTED)
-    reads = sub.select(F.explode("TablesRead").alias("table_name")).withColumn(
-        "is_write", F.lit(0)
-    )
-    writes = sub.select(F.explode("TablesWritten").alias("table_name")).withColumn(
-        "is_write", F.lit(1)
+    hot_rank is plans/ranking.distributed_row_number over (total desc, name asc):
+    one distributed sort, not a global no-partitionBy Window, since a large estate
+    can have millions of distinct tables. Calling this starts no Spark job."""
+    refs = (
+        events.filter(F.col("EventType") == EVENT_QUERY_SUBMITTED)
+        .select(F.expr("stack(2, TablesRead, 0, TablesWritten, 1) AS (tables, is_write)"))
+        .select(F.explode("tables").alias("table_name"), "is_write")
     )
     counts = (
-        reads.unionByName(writes)
-        .groupBy("table_name")
+        refs.groupBy("table_name")
         .agg(
             F.sum(F.lit(1) - F.col("is_write")).cast("long").alias("read_count"),
             F.sum("is_write").cast("long").alias("write_count"),

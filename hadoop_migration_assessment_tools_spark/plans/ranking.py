@@ -1,82 +1,39 @@
 """Physical-plan strategies: distributed global ranking.
 
 ``row_number().over(Window.orderBy(...))`` with no partitionBy funnels every row
-through ONE task — survivable post-aggregation at small SF, a straggler at 100 TB
-(a large estate can have millions of distinct tables). The scalable shape is a
-two-phase rank:
-
-1. ``repartitionByRange`` on the sort key — Spark's range partitioner samples the
-   key distribution and assigns contiguous, globally ordered key ranges to N
-   partitions, so partition i holds strictly higher-ranked rows than partition i+1.
-2. rank locally within each range partition (a Window *partitioned* by the range
-   partition id — every task ranks only its own slice).
-3. add per-partition row-count offsets: an N-row aggregate (N = shuffle partitions,
-   not data size), cumulated with a window over those N rows and broadcast back.
-
-The only single-task stage left operates on N rows, which is bounded by config, not
-by data. Results are identical to the global window for any total ordering (callers
-must pass a tie-breaking sort key).
+through ONE task: survivable post-aggregation at small SF, a straggler at 100 TB
+(a large estate can have millions of distinct tables). ``distributed_row_number``
+ranks with one global sort and Spark's distributed sequence number instead, so the
+numbering is planned inside the query like any other operator.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql.internal import InternalFunction
 from pyspark.sql.window import Window
 
 
 def distributed_row_number(
-    df: DataFrame,
-    order_by: list[Column],
-    rank_col: str = "rank",
-    num_partitions: int | None = None,
+    df: DataFrame, order_by: list[Column], rank_col: str = "rank"
 ) -> DataFrame:
     """Globally consistent row_number over ``order_by`` without a single-partition
-    Window over the data. ``order_by`` must be a total order (include a tiebreaker);
-    otherwise ranks at partition boundaries are arbitrary among ties.
+    Window over the data. ``order_by`` must be a total order (include a
+    tiebreaker); otherwise ranks among ties are arbitrary.
+
+    Plans as ``AttachDistributedSequence`` over a ``Sort`` over a
+    ``rangepartitioning`` exchange, the mechanism behind pandas-on-Spark's
+    ``distributed-sequence`` index. The sort stays distributed (its width is
+    ``spark.sql.shuffle.partitions`` under AQE, like every other sort), and the
+    numbering is a ``zipWithIndex`` over the sorted partitions: one job counts
+    each partition's rows, then every task numbers its own rows from its
+    partition's offset. One branch reads the range partitioning, so there is no
+    second sample to disagree with. The operator persists its input
+    (``MEMORY_AND_DISK_SER``, which keeps lineage) for that count and unpersists it
+    when the query ends. Calling this starts no Spark job.
     """
-    if num_partitions:
-        ranged = df.repartitionByRange(num_partitions, *order_by)
-    else:  # let spark.sql.shuffle.partitions decide
-        ranged = df.repartitionByRange(*order_by)
-    # CORRECTNESS-CRITICAL lineage cut (round-4 bug fix): the local-rank branch and
-    # the offsets branch below must see the SAME partition assignment. Without the
-    # checkpoint each branch re-evaluates the range exchange independently, and the
-    # range partitioner's reservoir SAMPLING can pick different bounds per
-    # evaluation (column pruning makes the two subplans non-identical, so
-    # ReuseExchange does not dedupe them) — offsets then disagree with local ranks
-    # and ranks shift at partition boundaries. Observed on events at sf0.01 (8777
-    # wrong ranks); the synthetic-data equality test never tripped it. The
-    # checkpoint materializes the partitioning once; both branches read it.
-    # eager=False does not make it lazy under AQE (session.py turns AQE on):
-    # building the checkpoint's RDD plans the adaptive query, and that runs every
-    # shuffle stage below it. So this call runs Spark jobs before the caller's
-    # action: for table_access_frequency over the 10k-query benchmark log, 5 jobs
-    # (~1.1-1.5 s on 4 cores) when it is called, then 5 more (~0.3-0.4 s) in its
-    # collect().
-    tagged = ranged.withColumn(
-        "_range_pid", F.spark_partition_id()
-    ).localCheckpoint(eager=False)
-    local = tagged.withColumn(
-        "_local_rn",
-        F.row_number().over(Window.partitionBy("_range_pid").orderBy(*order_by)),
-    )
-    # N-row offset table: rows-before-me per range partition. The no-partitionBy
-    # window here is deliberate and safe: its input is one row per partition id.
-    sizes = tagged.groupBy("_range_pid").agg(F.count(F.lit(1)).alias("_n"))
-    offsets = sizes.select(
-        "_range_pid",
-        F.coalesce(
-            F.sum("_n").over(
-                Window.orderBy("_range_pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("_offset"),
-    )
-    return (
-        local.join(F.broadcast(offsets), "_range_pid")
-        .withColumn(rank_col, (F.col("_local_rn") + F.col("_offset")).cast("long"))
-        .drop("_range_pid", "_local_rn", "_offset")
-    )
+    seq = InternalFunction.distributed_sequence_id()
+    return df.orderBy(*order_by).select("*", (seq + 1).cast("long").alias(rank_col))
 
 
 def salted_group_topk(
@@ -101,9 +58,9 @@ def salted_group_topk(
     2. re-rank the survivors per group — at most ``k * salt_buckets`` rows
        per group reach this window, bounded by config, not by data.
 
-    Results are identical to the plain window for any TOTAL order (callers
-    must include a tie-breaker in ``order_by``, same contract as
-    ``distributed_row_number``). The default salt is a per-row spread (hash of
+    Results are identical to the plain window for any TOTAL order: callers
+    must include a tie-breaker in ``order_by``, or ranks among ties are
+    arbitrary, as in any row_number. The default salt is a per-row spread (hash of
     a row id, the plans/skew.py move), so identical sort keys still fan out;
     pass ``salt`` (any int expression in [0, salt_buckets), e.g. a portable
     hash of a unique key — the r11 oracled row events_salted_group_topk does

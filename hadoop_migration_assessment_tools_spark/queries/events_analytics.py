@@ -906,21 +906,19 @@ WINDOW w AS (PARTITION BY user_id ORDER BY value ASC, event_id ASC)
 
 # --- events_global_rank_sample ------------------------------------------------------
 # SRT/WIN scale evidence, driver-visible: a GLOBAL total-order rank over the whole
-# events table via the two-phase distributed rank (plans/ranking.py — range
-# repartition + partition-local row_number + N-row broadcast offsets; the only
-# single-partition stage is the N-row offset table), then a systematic 1-in-997
-# sample by rank. The naive form is a no-partitionBy Window — one task sorting
-# everything, the classic 100 TB straggler. DuckDB recomputes the global rank
-# directly, certifying the two-phase decomposition end to end on real data.
+# events table via plans/ranking.distributed_row_number (one range-partitioned
+# distributed sort numbered by Spark's distributed sequence id; no stage runs in a
+# single task), then a systematic 1-in-997 sample by rank. The naive form is a
+# no-partitionBy Window: one task sorting everything, the classic 100 TB
+# straggler. DuckDB recomputes the global rank directly, certifying the
+# distributed numbering end to end on real data.
 
 
 def events_global_rank_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans.ranking import distributed_row_number
 
     ev = _events(spark, sf_dir).select("event_id", "ts", "user_id", "value")
-    ranked = distributed_row_number(
-        ev, [F.asc("ts"), F.asc("event_id")], rank_col="global_rank", num_partitions=16
-    )
+    ranked = distributed_row_number(ev, [F.asc("ts"), F.asc("event_id")], rank_col="global_rank")
     return (
         ranked.filter((F.col("global_rank") - 1) % 997 == 0)
         .select(

@@ -1609,9 +1609,10 @@ ORDERS_ZORDER_LOCALITY_ORACLE = _zorder_oracle()
 # sf0.01 (about HALF the files read for the same box predicate). One hash
 # certifies both curves' keys (checksums), the equal-count file assignment,
 # every file's rectangle, and the aggregate comparison. Ranks come from
-# plans/ranking.distributed_row_number (no single-task window over the
-# data); the oracle replays the unrolled Lam-Shapiro chain as per-level CTEs
-# and a plain ROW_NUMBER.
+# plans/ranking.distributed_row_number (one distributed sort numbered by
+# Spark's distributed sequence id, no single-task window over the data); the
+# oracle replays the unrolled Lam-Shapiro chain as per-level CTEs and a plain
+# ROW_NUMBER.
 
 HB_FILES = 48
 

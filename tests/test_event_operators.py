@@ -30,6 +30,8 @@ from hadoop_migration_assessment_tools_spark.functions.scalars import (
     mr_job_to_application_id,
 )
 from hadoop_migration_assessment_tools_spark.schema import HOOK_INPUT_SCHEMA, QUERY_EVENTS_SCHEMA
+from hadoop_migration_assessment_tools_spark.sources.readers import read_event_log
+from hadoop_migration_assessment_tools_spark.sources.sink import DatePartitionedSink
 
 
 def _ms(millis: int) -> dt.datetime:
@@ -494,12 +496,62 @@ def test_repeated_report_reuses_generated_code(spark):
 
 
 def test_table_access_frequency(spark):
+    """Per-table counts over the submissions. A NULL table array contributes no
+    rows, and a submission with a NULL QueryId is counted like any other."""
     ev = _synthetic_events(spark)
-    freq = {r["table_name"]: r for r in table_access_frequency(ev).collect()}
+    no_id = ev.filter(F.col("QueryId") == "hive_query_id_0").withColumns(
+        {"QueryId": F.lit(None).cast("string"), "TablesWritten": F.lit(None).cast("array<string>")}
+    )
+    freq = {r["table_name"]: r for r in table_access_frequency(ev.unionByName(no_id)).collect()}
     assert freq["db@sink"]["write_count"] == 3
     assert freq["db@sink"]["read_count"] == 0
-    assert freq["db@t0"]["read_count"] == 2  # i=0,3
+    assert freq["db@t0"]["read_count"] == 3  # i=0,3 and the NULL-QueryId copy of i=0
     assert freq["db@sink"]["hot_rank"] == 1
+    assert sorted(r["hot_rank"] for r in freq.values()) == list(range(1, len(freq) + 1))
+
+
+def _stored_log_frequency(spark, tmp_path):
+    """table_access_frequency over a deduplicated parquet log read back from disk,
+    with the Spark jobs its call started."""
+    base = str(tmp_path / "events")
+    DatePartitionedSink(base).write_batch(_synthetic_events(spark))
+    sc = spark.sparkContext
+    group = "table_access_frequency_call"
+    sc.setJobGroup(group, "call table_access_frequency")
+    try:
+        freq = table_access_frequency(deduplicate_events(read_event_log(spark, base)))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return freq, list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_table_access_frequency_call_starts_no_spark_job(spark, tmp_path):
+    """The rank is planned inside the query: calling the operator runs nothing until
+    an action."""
+    freq, jobs = _stored_log_frequency(spark, tmp_path)
+    assert jobs == []
+    assert freq.count() == 4
+
+
+def test_table_access_frequency_reads_its_input_once(spark, tmp_path):
+    """One generator explodes reads and writes together, so the plan scans the log
+    once and runs the dedup exchange once."""
+    freq, _ = _stored_log_frequency(spark, tmp_path)
+    plan = freq._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    assert plan.count("FileScan") == 1, plan
+    assert plan.count("REPARTITION_BY_COL") == 1, plan
+
+
+def test_table_access_frequency_leaves_nothing_persisted(spark, tmp_path):
+    """The sequence numbering persists its sorted input for one query only: after
+    collect() the session holds no more persisted RDDs than before the call."""
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    before = persisted().size()
+    freq, _ = _stored_log_frequency(spark, tmp_path)
+    assert len(freq.collect()) == 4
+    assert persisted().size() == before
 
 
 # --- expression trees built once per session (session.per_session) -----------------

@@ -152,12 +152,12 @@ PLAN_SIGNATURES: dict[str, dict[str, int]] = {
     "emb_near_dup_pairs": dict(
         shuffle_exchange=2, broadcast_exchange=1, bnlj=0, cartesian=0, smj=0, bhj=1, shj=0, window=0
     ),
-    # Re-pinned round 4: distributed_row_number's correctness lineage cut
-    # (localCheckpoint before the rank/offset branches) moves the pre-checkpoint
-    # shuffles out of this plan's visible lineage (11 -> 3); they still run once
-    # at materialization.
+    # hot_rank is one global sort numbered by AttachDistributedSequence
+    # (plans/ranking.py): no rank window, no offsets broadcast join, no local
+    # checkpoint hiding the exchanges below it. The three shuffles are the
+    # per-order collect, the per-table count and the sort's range exchange.
     "qe_table_read_frequency": dict(
-        shuffle_exchange=3, broadcast_exchange=1, bnlj=0, cartesian=0, smj=0, bhj=1, shj=0, window=2
+        shuffle_exchange=3, broadcast_exchange=0, bnlj=0, cartesian=0, smj=0, bhj=0, shj=0, window=0
     ),
     "q1_pricing_summary": dict(
         shuffle_exchange=2, broadcast_exchange=0, bnlj=0, cartesian=0, smj=0, bhj=0, shj=0, window=0
@@ -235,8 +235,12 @@ PLAN_SIGNATURES: dict[str, dict[str, int]] = {
     "events_null_safe_join": dict(
         shuffle_exchange=5, broadcast_exchange=0, bnlj=0, cartesian=0, smj=1, bhj=0, shj=0, window=0
     ),
+    # The global rank is one range-partitioned sort numbered by
+    # AttachDistributedSequence (plans/ranking.py): no rank window, no offsets
+    # broadcast join. The two shuffles are the rank's range exchange and the
+    # output's own.
     "events_global_rank_sample": dict(
-        shuffle_exchange=4, broadcast_exchange=1, bnlj=0, cartesian=0, smj=0, bhj=1, shj=0, window=2
+        shuffle_exchange=2, broadcast_exchange=0, bnlj=0, cartesian=0, smj=0, bhj=0, shj=0, window=0
     ),
     # Capstone: stage materialization (localCheckpoint between stages, the way a
     # real pipeline persists) keeps the five funnel branches from re-carrying the

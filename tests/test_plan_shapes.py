@@ -45,56 +45,68 @@ def test_events_scan_prunes_columns(spark):
 
 
 def test_table_frequency_rank_is_distributed(spark):
-    """AGG6 fix (VERDICT r1 'What's wrong' #1): the hot_rank Window must be partitioned
-    by the range-partition id, never a no-partitionBy Window over the counts. The only
-    permissible single-partition stage is the N-row offset table."""
-    plan = _plan(spark, "qe_table_read_frequency")
-    window_specs = [l for l in plan.splitlines() if "row_number()" in l]
-    assert window_specs, "expected a row_number window in the plan"
-    for line in window_specs:
-        assert "_range_pid" in line, f"row_number window not partition-local: {line}"
+    """AGG6 (VERDICT r1 'What's wrong' #1): hot_rank is never a no-partitionBy Window
+    over the counts. It is a distributed sequence number attached to one global
+    sort, whose input arrives through a range-partitioning exchange, so every
+    stage of the rank runs across many tasks."""
+    df = QUERIES["qe_table_read_frequency"](spark, SF)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    nodes = [l.strip(" +-:") for l in plan.splitlines()]
+    assert not [n for n in nodes if n.startswith(("Window ", "WindowGroupLimit "))], plan
+    attach = next(i for i, n in enumerate(nodes) if n.startswith("AttachDistributedSequence"))
+    below = [n for n in nodes[attach + 1 :] if n.startswith(("Sort ", "Exchange "))]
+    assert below[0].startswith("Sort ") and below[1].startswith("Exchange rangepartitioning("), plan
 
 
-def test_distributed_row_number_matches_global_window(spark):
-    """Two-phase rank must equal the single-partition global window bit-for-bit."""
+def _rank_against_global_window(spark, df, order):
+    """distributed_row_number's ranks and a single-partition row_number's, with AQE
+    partition coalescing off so that the sorted input keeps several range
+    partitions and their boundaries are exercised."""
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
     from hadoop_migration_assessment_tools_spark.plans.ranking import distributed_row_number
+
+    key = df.columns[0]
+    conf = "spark.sql.adaptive.coalescePartitions.enabled"
+    orig = spark.conf.get(conf)
+    spark.conf.set(conf, "false")
+    try:
+        assert df.orderBy(*order).rdd.getNumPartitions() > 1
+        got = {r[key]: r["rank"] for r in distributed_row_number(df, order, "rank").collect()}
+    finally:
+        spark.conf.set(conf, orig)
+    want = {
+        r[key]: r["rank"]
+        for r in df.withColumn("rank", F.row_number().over(Window.orderBy(*order))).collect()
+    }
+    return got, want
+
+
+def test_distributed_row_number_matches_global_window(spark):
+    """The distributed rank equals the single-partition global window bit-for-bit."""
+    from pyspark.sql import functions as F
 
     df = spark.range(0, 5000).select(
         (F.col("id") % 997).alias("k"), ((F.col("id") * 37) % 101).alias("v")
     ).groupBy("k").agg(F.sum("v").alias("total"))
-    order = [F.desc("total"), F.asc("k")]
-    got = {r["k"]: r["rank"] for r in distributed_row_number(df, order, "rank", 8).collect()}
-    want = {
-        r["k"]: r["rank"]
-        for r in df.withColumn("rank", F.row_number().over(Window.orderBy(*order))).collect()
-    }
+    got, want = _rank_against_global_window(spark, df, [F.desc("total"), F.asc("k")])
     assert got == want
 
 
 def test_distributed_row_number_matches_global_window_on_real_data(spark):
-    """Regression for the round-4 bug: without the lineage cut, the offsets branch
-    re-sampled the range exchange and disagreed with the local-rank branch on the
-    REAL events table (8777 wrong ranks at sf0.01) while synthetic data passed.
-    Pin equality on the data that exposed it."""
+    """Regression for the round-4 bug: a rank built from two branches that each
+    sampled the range exchange disagreed with the global window on the REAL events
+    table (8777 wrong ranks at sf0.01) while synthetic data passed. Pin equality on
+    the data that exposed it."""
     from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
 
-    from hadoop_migration_assessment_tools_spark.plans.ranking import distributed_row_number
     from hadoop_migration_assessment_tools_spark.sources.readers import load_table
 
     ev = load_table(spark, "/root/testdata/sf0.01", "events").select("event_id", "ts")
-    order = [F.asc("ts"), F.asc("event_id")]
-    got = {
-        r["event_id"]: r["rank"]
-        for r in distributed_row_number(ev, order, "rank", 16).collect()
-    }
-    want = {
-        r["event_id"]: r["rank"]
-        for r in ev.withColumn("rank", F.row_number().over(Window.orderBy(*order))).collect()
-    }
+    got, want = _rank_against_global_window(spark, ev, [F.asc("ts"), F.asc("event_id")])
     assert got == want
 
 

@@ -365,31 +365,6 @@ def test_jsonl_quarantine_split(spark, tmp_path):
     assert any("not_a_number" in l for l in bad_lines)
 
 
-def test_schema_evolution_across_file_generations(spark, tmp_path):
-    """SRC5/SRC7 evolution: v2 files add a column; mergeSchema reads both
-    generations, v1 rows surface NULL for the new column, and a default fills it —
-    the upgrade path when the hook adds a field between releases."""
-    from pyspark.sql import functions as F
-
-    base = str(tmp_path / "evolving")
-    v1 = spark.createDataFrame([(1, "a"), (2, "b")], "id long, name string")
-    v1.write.parquet(base + "/gen=1")
-    v2 = spark.createDataFrame(
-        [(3, "c", "tez"), (4, "d", "mr")], "id long, name string, engine string"
-    )
-    v2.write.parquet(base + "/gen=2")
-
-    merged = spark.read.option("mergeSchema", "true").parquet(base)
-    assert set(merged.columns) >= {"id", "name", "engine"}
-    rows = {
-        r["id"]: r["eng"]
-        for r in merged.select(
-            "id", F.coalesce("engine", F.lit("unknown")).alias("eng")
-        ).collect()
-    }
-    assert rows == {1: "unknown", 2: "unknown", 3: "tez", 4: "mr"}
-
-
 def test_prune_log_tree_retention(spark, tmp_path):
     """Retention pruning: day partitions before the cutoff vanish (whole-dir
     metadata deletes — no scan, no rewrite), survivors are byte-untouched, and
